@@ -21,8 +21,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspider_spark.session import default_parallelism  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_parallelism()
 CRAWL_ROUNDS = int(os.environ.get("SPARK_GRAFT_CRAWL_ROUNDS", "4"))
 
 # Headline operators: the crawl-shaped SQL operators + the training-data

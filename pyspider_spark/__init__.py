@@ -14,7 +14,7 @@ Subpackages
 - ``canon``      URL canonicalization (Arrow-vectorized)
 - ``synth``      deterministic synthetic web graph + image corpus
 - ``imaging``    pure-python PNG codec + deterministic lossy stub + phash
-- ``seen``       URL-seen dedup: exact anti-join + partitioned bloom filters
+- ``seen``       URL membership sets (seen, enqueued): exact append + left-join probe
 - ``scheduler``  priority+age pop, politeness budgets, robots, retry/captcha
 - ``fetch``      deterministic synthetic fetcher (Arrow-batched)
 - ``stages``     parse stages: JSONP/JSON/regex extract, item projection, fan-out

@@ -35,7 +35,6 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument("--seed-tag", default="cli1")
     c.add_argument("--cores", type=int, default=None, help="local[N] cores (ignored under spark-submit)")
     c.add_argument("--global-budget", type=int, default=None)
-    c.add_argument("--no-bloom", action="store_true")
 
     v = sub.add_parser("vacuum", help="drop unreachable snapshots/data dirs")
     v.add_argument("--workdir", required=True)
@@ -71,7 +70,6 @@ def main(argv: list[str] | None = None) -> int:
         spark,
         args.workdir,
         spec,
-        use_bloom=not args.no_bloom,
         global_budget=args.global_budget,
     )
     stats = eng.run(max_rounds=args.rounds, resume=args.resume)

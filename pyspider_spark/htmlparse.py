@@ -32,7 +32,9 @@ def sniff_decode(data: bytes, content_type: str | None = None) -> str:
     (r4 VERDICT item 7; reference analogue: BeautifulSoup's
     UnicodeDammit behind common/response.py:48-53 ``.text``):
 
-    1. byte-order mark (UTF-8 / UTF-16 LE / BE) wins outright;
+    1. byte-order mark (UTF-8 / UTF-32 LE / BE / UTF-16 LE / BE) wins
+       outright — UTF-32 first, since the UTF-32-LE mark begins with the
+       UTF-16-LE one;
     2. ``charset=`` parameter of the Content-Type header;
     3. prescan of the first 1024 bytes for ``<meta charset=...>`` or
        ``<meta http-equiv="content-type" content="...charset=...">``;
@@ -47,6 +49,10 @@ def sniff_decode(data: bytes, content_type: str | None = None) -> str:
 
     if data.startswith(codecs.BOM_UTF8):
         return data[3:].decode("utf-8", "replace")
+    if data.startswith(codecs.BOM_UTF32_LE):
+        return data[4:].decode("utf-32-le", "replace")
+    if data.startswith(codecs.BOM_UTF32_BE):
+        return data[4:].decode("utf-32-be", "replace")
     if data.startswith(codecs.BOM_UTF16_LE):
         return data[2:].decode("utf-16-le", "replace")
     if data.startswith(codecs.BOM_UTF16_BE):

@@ -20,7 +20,7 @@ therefore O(popped + new links), never O(backlog); a periodic
 compaction round folds tombstones in and truncates ``tomb``.
 
 Vetting (dedup + robots) happens at link-DISCOVERY time, gated by the
-``enqueued`` membership set (bloom-accelerated, same machinery as the
+``enqueued`` membership set (an exact left join, same machinery as the
 seen set), so rows in the frontier are final and the pop path never
 re-vets — per-round vet work is O(new links).
 
@@ -65,13 +65,13 @@ from .synth import CAPTCHA_MARKER, GraphSpec
 from .tables import TableStore
 
 ALL_TABLES = [
-    "frontier", "tomb", "enqueued", "enqueued_filters",
-    "seen", "seen_filters", "items", "api_items", "sales_items",
+    "frontier", "tomb", "enqueued",
+    "seen", "items", "api_items", "sales_items",
     "images", "metrics", "near_dup_images", "fetch_cache",
     "phash_filters", "image_bands",
 ]
 
-COMPACT_EVERY = 8  # rounds between frontier/bloom compactions
+COMPACT_EVERY = 8  # rounds between state compactions
 
 # Tombstone sets at or under this many rows ride the broadcast side of
 # the frontier anti-join (the backlog side never shuffles). Above it —
@@ -136,7 +136,6 @@ class CrawlEngine:
         workdir: str,
         spec: GraphSpec,
         n_seen_partitions: int = 32,
-        use_bloom: bool = True,
         global_budget: int | None = None,
         collect_pop_sequence: bool = False,
         fetch_cache_ttl_rounds: int | None = None,
@@ -146,20 +145,19 @@ class CrawlEngine:
         batch_sales: bool = True,
         transport: str = "sim",
         http_opts: dict | None = None,
+        store=None,
     ):
         self.spark = spark
         self.spec = spec
         self.workdir = workdir
-        self.store = TableStore(spark, workdir)
-        self.seen = SeenSet(self.store, n_partitions=n_seen_partitions, use_bloom=use_bloom)
+        # any object with TableStore's public surface (e.g. an
+        # iceberg.IcebergTableStore); the round ledger stays in workdir
+        self.store = store if store is not None else TableStore(spark, workdir)
+        self.seen = SeenSet(self.store, n_partitions=n_seen_partitions)
         # url-ever-enqueued membership (dedup at link-discovery time) —
-        # same bloom-backed structure over its own tables.
+        # same structure over its own table.
         self.enqueued = SeenSet(
-            self.store,
-            n_partitions=n_seen_partitions,
-            use_bloom=use_bloom,
-            table="enqueued",
-            filters_table="enqueued_filters",
+            self.store, n_partitions=n_seen_partitions, table="enqueued"
         )
         self.global_budget = global_budget
         self.collect_pop_sequence = collect_pop_sequence
@@ -189,6 +187,7 @@ class CrawlEngine:
         self.last_frontier_rows = 0
         self._round_persists: list[DataFrame] = []
         self._ledger_path = os.path.join(workdir, "_manifests", "rounds.json")
+        os.makedirs(os.path.dirname(self._ledger_path), exist_ok=True)
         # wall-clock per phase, cumulative across rounds — each entry is
         # the time between consecutive blocking actions, so it attributes
         # every lazily-built plan to the action that materialized it.
@@ -708,9 +707,9 @@ class CrawlEngine:
 
     def _vet_new_links(self, links: DataFrame, r: int, stats: RoundStats):
         """Canonicalize discovered links and vet them at DISCOVERY time:
-        in-batch first-parent dedup → enqueued-set membership (bloom
-        prefilter + exact verify; covers seen, queued, and every earlier
-        discovery) → robots. Survivors are final frontier rows (vetted
+        in-batch first-parent dedup → enqueued-set membership (exact
+        left join; covers seen, queued, and every earlier discovery) →
+        robots. Survivors are final frontier rows (vetted
         once, never re-vetted); dropped rows are never written at all.
 
         Returns ``(count_fn, survivors)``: calling ``count_fn()`` runs
@@ -950,8 +949,6 @@ class CrawlEngine:
         - frontier: fold pop tombstones in (rewrite live rows only) and
           truncate ``tomb`` — bounds the anti-join side and the table's
           dead-row fraction to O(COMPACT_EVERY × pops).
-        - bloom blobs: OR-merge accumulated per-round blobs so reads
-          stay O(partitions), not O(rounds).
         - fetch_cache: rewrite the live TTL window (newest row per key
           still fresh at round r+1) and truncate history — TTL filters
           prune *reads* via footer stats, but without this the table
@@ -994,8 +991,6 @@ class CrawlEngine:
                 "fetch_cache", live.select(*[f.name for f in FETCH_CACHE.fields])
             )
 
-        self.seen.compact_filters(r)
-        self.enqueued.compact_filters(r)
         # band-index blobs: rebuild one right-sized blob per partition
         # (also resolves any saturation accumulated from round appends)
         if self.store.count_rows("image_bands") > 0:

@@ -9,9 +9,9 @@ Design (banded LSH over the 64-bit perceptual hash):
   banded equality is a lossless candidate filter for that radius.
 - a bloom filter over all previously-seen ``(band_id, band_value)``
   keys is tiny (8 keys/image → even 10^10 images fit a few GiB at 1%
-  FPR; per-partition blobs like seen.py at that scale — broadcast at
-  ours) and prunes brand-new images before any join: an image whose 8
-  band keys all miss the bloom has NO near-dup among seen images.
+  FPR; per-partition blobs at that scale — broadcast at ours) and
+  prunes brand-new images before any join: an image whose 8 band keys
+  all miss the bloom has NO near-dup among seen images.
 - surviving candidates join the images table on the band key; the exact
   ``bit_count(xor)`` hamming check keeps true pairs.
 
@@ -50,12 +50,53 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .seen import bloom_build, bloom_maybe_contains, bloom_merge
+from .hashing import h64
+
+N_HASHES = 5
+
+
+def _bloom_positions(key: str, n_bits: int) -> list[int]:
+    """Double hashing: pos_i = (h1 + i*h2) mod bits (Kirsch-Mitzenmacher)."""
+    h1 = h64("bf1", key)
+    h2 = h64("bf2", key) | 1
+    return [(h1 + i * h2) % n_bits for i in range(N_HASHES)]
+
+
+def bloom_build(keys: pd.Series, n_bits: int) -> bytes:
+    bits = np.zeros(n_bits // 8, dtype=np.uint8)
+    for k in keys:
+        for p in _bloom_positions(k, n_bits):
+            bits[p >> 3] |= 1 << (p & 7)
+    return bits.tobytes()
+
+
+def bloom_merge(blobs: list[bytes], n_bits: int) -> bytes:
+    acc = np.zeros(n_bits // 8, dtype=np.uint8)
+    for b in blobs:
+        acc |= np.frombuffer(b, dtype=np.uint8)
+    return acc.tobytes()
+
+
+def bloom_maybe_contains(keys: pd.Series, blob: bytes | None, n_bits: int) -> pd.Series:
+    if blob is None:
+        return pd.Series(False, index=keys.index)
+    bits = np.frombuffer(blob, dtype=np.uint8)
+    out = np.empty(len(keys), dtype=bool)
+    for i, k in enumerate(keys):
+        hit = True
+        for p in _bloom_positions(k, n_bits):
+            if not (bits[p >> 3] >> (p & 7)) & 1:
+                hit = False
+                break
+        out[i] = hit
+    return pd.Series(out, index=keys.index)
+
 
 N_BANDS = 8
 BAND_BITS = 8
@@ -164,8 +205,6 @@ def _sized_bloom(keys: pd.Series, n_bits_floor: int) -> bytes:
     SATURATION_DENSITY the size doubles and the build repeats — a
     saturated blob silently passes everything, degrading the prefilter
     to a full corpus join."""
-    import numpy as np
-
     n_bits = max(n_bits_floor, BAND_BLOB_BITS_MIN)
     want = 1 << (max(1, len(keys) * BITS_PER_KEY) - 1).bit_length()
     n_bits = max(n_bits, want)
@@ -189,8 +228,8 @@ class BandIndex:
       written once per round for that round's NEW images only, sorted by
       pid so corpus reads prune row groups via parquet min/max stats.
     - ``phash_filters``: per-partition bloom blobs sized from the actual
-      key count (seen.py pattern), appended per round and rebuilt
-      right-sized at compaction; probes check each blob independently so
+      key count, appended per round and rebuilt right-sized at
+      compaction; probes check each blob independently so
       blobs of different sizes coexist.
 
     Round cost: candidate detection is a cogrouped bloom probe over the
@@ -202,7 +241,7 @@ class BandIndex:
     def __init__(self, store, bands_table: str = "image_bands",
                  filters_table: str = "phash_filters",
                  n_bands: int = N_BANDS, band_bits: int = BAND_BITS):
-        from .schemas import IMAGE_BANDS, SEEN_FILTERS
+        from .schemas import IMAGE_BANDS, PHASH_FILTERS
 
         assert n_bands * band_bits == 64, "bands must tile the 64-bit phash"
         self.store = store
@@ -211,12 +250,12 @@ class BandIndex:
         self.n_bands = n_bands
         self.band_bits = band_bits
         self._BANDS = IMAGE_BANDS
-        self._FILTERS = SEEN_FILTERS
+        self._FILTERS = PHASH_FILTERS
         self._validate_geometry()
 
-    # Geometry is a persistent property of the stored index (same
-    # hazard SeenSet guards): band keys like '3:255' written under
-    # (8,8) can never equal '1:65535'-style keys probed under (4,16),
+    # Geometry is a persistent property of the stored index: band keys
+    # like '3:255' written under (8,8) can never equal '1:65535'-style
+    # keys probed under (4,16),
     # so a reopen with different geometry silently misses every
     # pre-switch near-dup. Recorded on first append, validated on open.
     def _meta_path(self) -> str:

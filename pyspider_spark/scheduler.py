@@ -334,7 +334,7 @@ def rank_adaptive(
 
     ``count_on``: frame to measure per-host backlog on. Pass a CHEAPER
     superset of ``ready`` (e.g. the raw frontier scan before the
-    dedup/bloom chain) so the pre-pass doesn't materialize an expensive
+    dedup/membership chain) so the pre-pass doesn't materialize an expensive
     lineage twice; over-counting only salts a host that didn't need it.
 
     ``big_hosts``: precomputed over-threshold host list — callers that

@@ -52,8 +52,8 @@ IMAGES = T.StructType(
 
 # URL-seen set (≙ in-memory set()s + Redis SADD in the reference:
 # spiders/amazon/crawl_cate_link.py:56, spiders/pdd/billboard/
-# crawl_billboard_id.py:16-17). partition_id co-partitions with the
-# per-partition bloom blobs in SEEN_FILTERS.
+# crawl_billboard_id.py:16-17). One row per url_canon; partition_id
+# is the row-group pruning key.
 SEEN = T.StructType(
     [
         T.StructField("url_canon", T.StringType(), False),
@@ -62,8 +62,9 @@ SEEN = T.StructType(
     ]
 )
 
-# Per-partition bloom filter blobs over SEEN (SURVEY.md §4.3).
-SEEN_FILTERS = T.StructType(
+# Per-partition bloom filter blobs over the image band index
+# (neardup.BandIndex).
+PHASH_FILTERS = T.StructType(
     [
         T.StructField("partition_id", T.IntegerType(), False),
         T.StructField("round", T.IntegerType(), False),
@@ -232,11 +233,10 @@ TABLE_SCHEMAS = {
     "frontier": FRONTIER,
     "images": IMAGES,
     "seen": SEEN,
-    "seen_filters": SEEN_FILTERS,
     # url-ever-enqueued membership set (dedup at link-discovery time);
     # same shape as the seen set, maintained by the same SeenSet class.
     "enqueued": SEEN,
-    "enqueued_filters": SEEN_FILTERS,
+    "phash_filters": PHASH_FILTERS,
     "tomb": TOMB,
     "image_bands": IMAGE_BANDS,
     "items": ITEMS,

@@ -1,251 +1,63 @@
-"""URL-seen dedup: exact anti-join + persisted per-partition bloom filters.
+"""URL membership sets: exact insert-if-absent and exact left-join probe.
 
 Reference semantics: in-memory ``set()`` membership and Redis ``SADD``
 (reference spiders/jingxi/jingxi_category_sales.py:17,101;
 spiders/amazon/crawl_cate_link.py:56) — exactly-once fetch per URL.
 
-Spark-first design (SURVEY.md §4.3):
-
-- URL space is hash-partitioned: ``partition_id = h64(url_canon) % P``.
-- ``seen`` table stores exact url_canons with their partition_id.
-- ``seen_filters`` stores one bloom blob per partition, merged (OR) as
-  rounds append. The blob set is bounded: bits/partition fixed at build
-  time, so 10^10 URLs at 1% FPR ≈ 12 GiB total across ALL partitions of
-  a 1000-executor cluster — each executor holds only its partitions'
-  blobs (cogrouped, never broadcast).
-- Candidate filtering cogroups candidate URLs with their partition's
-  blob via ``applyInPandas`` (Arrow-batched, numpy bit ops — no per-row
-  Python): definite-new rows skip the exact join entirely; only
-  maybe-seen rows hit the exact ``left_anti`` — at steady state that is
-  a small fraction of the batch, so the expensive shuffle join runs on
-  ~(dup_rate + FPR) x batch instead of the full batch.
-
-False positives never cause a re-crawl (safe direction); the exact join
-removes them from the *dedup* decision, so correctness is exact.
+Spark-first design (SURVEY.md §4.3): a set is an append-only table
+holding one row per ``url_canon`` (with the round it joined and its
+``partition_id = xxhash64(url_canon) % P``, the row-group pruning key).
+A probe is ONE left join of the candidates against the set's
+``url_canon`` column — no approximate prefilter. A bloom only pays when
+its "definitely new" answer skips the exact probe; here every batch
+must be resolved exactly anyway, so a filter would add a cogroup, a
+Python UDF and a per-round blob write without removing the join.
 """
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .hashing import h64
-from .schemas import SEEN, SEEN_FILTERS
+from .schemas import SEEN
 
 DEFAULT_PARTITIONS = 32
-DEFAULT_BITS_PER_PARTITION = 1 << 20  # 128 KiB/partition for tests; sized up at scale
-N_HASHES = 5
 
 
 def partition_id_col(url_canon, n_partitions: int):
     """Partition id for the URL space — JVM-side xxhash64 (codegen, no
-    Python). It only routes URLs to their bloom blob / seen partition;
-    the bloom membership hashes (bf1/bf2 below) are independent of it,
-    so it does not need to match the Python-side h64."""
+    Python). Membership never depends on it: it only buckets rows for
+    pruning, so any partition count gives the same answers."""
     return F.pmod(F.xxhash64(url_canon), F.lit(n_partitions)).cast("int")
 
 
-def _bloom_positions(url: str, n_bits: int) -> list[int]:
-    """Double hashing: pos_i = (h1 + i*h2) mod bits (Kirsch-Mitzenmacher)."""
-    h1 = h64("bf1", url)
-    h2 = h64("bf2", url) | 1
-    return [(h1 + i * h2) % n_bits for i in range(N_HASHES)]
-
-
-def bloom_build(urls: pd.Series, n_bits: int) -> bytes:
-    bits = np.zeros(n_bits // 8, dtype=np.uint8)
-    for u in urls:
-        for p in _bloom_positions(u, n_bits):
-            bits[p >> 3] |= 1 << (p & 7)
-    return bits.tobytes()
-
-
-def bloom_merge(blobs: list[bytes], n_bits: int) -> bytes:
-    acc = np.zeros(n_bits // 8, dtype=np.uint8)
-    for b in blobs:
-        acc |= np.frombuffer(b, dtype=np.uint8)
-    return acc.tobytes()
-
-
-def bloom_maybe_contains(urls: pd.Series, blob: bytes | None, n_bits: int) -> pd.Series:
-    if blob is None:
-        return pd.Series(False, index=urls.index)
-    bits = np.frombuffer(blob, dtype=np.uint8)
-    out = np.empty(len(urls), dtype=bool)
-    for i, u in enumerate(urls):
-        hit = True
-        for p in _bloom_positions(u, n_bits):
-            if not (bits[p >> 3] >> (p & 7)) & 1:
-                hit = False
-                break
-        out[i] = hit
-    return pd.Series(out, index=urls.index)
-
-
-def expected_fpr(n_items: int, n_bits: int) -> float:
-    if n_items == 0:
-        return 0.0
-    return (1.0 - math.exp(-N_HASHES * n_items / n_bits)) ** N_HASHES
-
-
 class SeenSet:
-    """Facade over the seen + seen_filters tables."""
+    """Facade over one url-keyed membership table (``seen`` by default;
+    the crawl uses a second instance over ``enqueued`` for dedup at
+    link-discovery time)."""
 
-    def __init__(
-        self,
-        store,
-        n_partitions: int = DEFAULT_PARTITIONS,
-        n_bits: int = DEFAULT_BITS_PER_PARTITION,
-        use_bloom: bool = True,
-        table: str = "seen",
-        filters_table: str = "seen_filters",
-    ):
+    def __init__(self, store, n_partitions: int = DEFAULT_PARTITIONS, table: str = "seen"):
         self.store = store
         self.P = n_partitions
-        self.n_bits = n_bits
-        self.use_bloom = use_bloom
-        # the same machinery backs any url-keyed membership set: the
-        # crawl uses a second instance over ("enqueued",
-        # "enqueued_filters") for dedup at link-discovery time.
         self.table = table
-        self.filters_table = filters_table
-        self._validate_geometry()
-
-    # The partition count and bloom sizing are PERSISTENT properties of
-    # the stored set, not free per-open knobs: blobs were built under a
-    # specific (P, n_bits), so probing them with different values makes
-    # seen URLs hash to blobs that never contained them ("definitely
-    # new" -> silent re-crawl) or crashes bloom_merge on shape mismatch.
-    # First add() records the geometry; every later open validates it.
-    def _meta_path(self) -> str:
-        import os
-
-        return os.path.join(self.store.root, "_manifests", f"{self.table}_meta.json")
-
-    def _validate_geometry(self) -> None:
-        import json
-        import os
-
-        p = self._meta_path()
-        if not os.path.exists(p):
-            return
-        with open(p) as f:
-            meta = json.load(f)
-        if meta["n_partitions"] != self.P or meta["n_bits"] != self.n_bits:
-            raise ValueError(
-                f"{self.table} set was built with n_partitions="
-                f"{meta['n_partitions']}, n_bits={meta['n_bits']}; reopening "
-                f"with ({self.P}, {self.n_bits}) would silently break dedup"
-            )
-        if not meta["use_bloom"] and self.use_bloom:
-            raise ValueError(
-                f"{self.table} set has rows added without bloom blobs; "
-                "reopening with use_bloom=True would treat them as unseen "
-                "(missing blob reads as 'definitely new')"
-            )
-
-    def _record_geometry(self) -> None:
-        import json
-        import os
-
-        p = self._meta_path()
-        if os.path.exists(p):
-            if not self.use_bloom:  # blobless rows poison any future bloom use
-                with open(p) as f:
-                    meta = json.load(f)
-                if meta["use_bloom"]:
-                    meta["use_bloom"] = False
-                    with open(p, "w") as f:
-                        json.dump(meta, f)
-            return
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w") as f:
-            json.dump(
-                {
-                    "n_partitions": self.P,
-                    "n_bits": self.n_bits,
-                    "use_bloom": self.use_bloom,
-                },
-                f,
-            )
 
     def read(self) -> DataFrame:
         return self.store.read_or_empty(self.table, SEEN)
-
-    def filter_unseen(self, candidates: DataFrame, url_col: str = "url_canon") -> DataFrame:
-        """Return candidates whose url_canon is NOT in the seen set.
-
-        One implementation of the probe exists — :meth:`mark_unseen`
-        (bloom cogroup prefilter → exact semi-join on the maybe-seen
-        slice → join back); this drops the marked rows instead of
-        counting them. Confirmed hits are unique per url, so the join
-        back never multiplies duplicate candidates."""
-        flag = "_member"
-        return (
-            self.mark_unseen(candidates, url_col, flag)
-            .filter(~F.col(flag))
-            .drop(flag)
-        )
 
     def mark_unseen(
         self, candidates: DataFrame, url_col: str = "url_canon",
         flag: str = "_member",
     ) -> DataFrame:
-        """Like :meth:`filter_unseen`, but MARKS confirmed-member rows
-        with a boolean ``flag`` column instead of dropping them — the
-        caller can then fold the dedup counter, the robots counter and
-        the survivor count into ONE aggregation job over one marked
-        frame (the engine's vet path). Same plan shape: bloom cogroup
-        prefilter → exact semi-join on the maybe slice → one left join
-        back. Candidates should be unique per ``url_col`` (the engine's
-        are — vet batches are grouped by url_canon first)."""
-        seen = self.read()
-        if not self.use_bloom:
-            hits = seen.select(F.col("url_canon").alias(url_col)).dropDuplicates(
-                [url_col]
-            )
-        else:
-            filters = self.store.read_or_empty(self.filters_table, SEEN_FILTERS)
-            slim = candidates.select(F.col(url_col).alias("_u")).withColumn(
-                "_pid", partition_id_col(F.col("_u"), self.P)
-            )
-            n_bits = self.n_bits
-
-            def flag_fn(cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-                if len(cand_pdf) == 0:
-                    return pd.DataFrame({"_u": pd.Series([], dtype=object)})
-                blob = None
-                if len(filt_pdf) > 0:
-                    blob = bloom_merge(list(filt_pdf["filter"]), n_bits)
-                maybe = bloom_maybe_contains(cand_pdf["_u"], blob, n_bits)
-                return pd.DataFrame({"_u": cand_pdf["_u"][maybe]})
-
-            from pyspark.sql import types as T
-
-            maybe_urls = (
-                slim.groupBy("_pid")
-                .cogroup(
-                    filters.withColumnRenamed("partition_id", "_pid").groupBy("_pid")
-                )
-                .applyInPandas(
-                    flag_fn,
-                    schema=T.StructType([T.StructField("_u", T.StringType())]),
-                )
-            )
-            hits = (
-                maybe_urls.join(
-                    seen.select(F.col("url_canon").alias("_u")),
-                    on="_u", how="left_semi",
-                )
-                .withColumnRenamed("_u", url_col)
-                .dropDuplicates([url_col])
-            )
-        hits = hits.withColumn(flag, F.lit(True))
-        out = candidates.join(hits, on=url_col, how="left_outer")
+        """Candidates with a boolean ``flag`` column, True where
+        ``url_col`` is already a member. Marking (instead of dropping)
+        lets the caller fold the dedup counter, the robots counter and
+        the survivor count into ONE aggregation over one frame (the
+        engine's vet path). The set holds one row per url_canon, so the
+        left join never multiplies a candidate."""
+        members = self.read().select(
+            F.col("url_canon").alias(url_col), F.lit(True).alias(flag)
+        )
+        out = candidates.join(members, on=url_col, how="left_outer")
         return out.withColumn(flag, F.coalesce(F.col(flag), F.lit(False)))
 
     def add(
@@ -255,61 +67,23 @@ class SeenSet:
         url_col: str = "url_canon",
         assume_new: bool = False,
     ) -> None:
-        """Insert-if-absent (Redis SADD analogue) + merge bloom blobs.
+        """Insert-if-absent (Redis SADD analogue).
 
-        ``assume_new=True`` skips the exact anti-join against the full
-        seen table (a whole-table scan + shuffle per round). Safe when
-        the caller guarantees the rows are unseen — true for the crawl
-        loop: first-pops already passed filter_unseen, and resume rolls
-        table pointers back to the last complete round, so a replayed
-        half-round can never double-append (its orphan dir is
-        unreachable from the restored snapshot)."""
-        self._record_geometry()
-        rows = (
-            urls.select(F.col(url_col).alias("url_canon"))
-            .dropDuplicates(["url_canon"])
-            .withColumn("first_round", F.lit(round_no).cast("int"))
-            .withColumn("partition_id", partition_id_col(F.col("url_canon"), self.P))
+        ``assume_new=True`` is a plain append: no dedup and no
+        anti-join against the whole set. Safe when the caller
+        guarantees the rows are unique and unseen — true for the crawl
+        loop: seeds are deduped in-batch, first-pops and vetted links
+        are unique per url_canon and already passed the membership
+        probe, and resume rolls table pointers back to the last
+        complete round, so a replayed half-round can never
+        double-append (its orphan dir is unreachable from the restored
+        snapshot)."""
+        rows = urls.select(
+            F.col(url_col).alias("url_canon"),
+            F.lit(round_no).cast("int").alias("first_round"),
+            partition_id_col(F.col(url_col), self.P).alias("partition_id"),
         )
         if assume_new:
-            self.store.append(self.table, rows.select(*[f.name for f in SEEN.fields]))
+            self.store.append(self.table, rows)
         else:
             self.store.merge_insert_if_absent(self.table, rows, "url_canon", SEEN)
-        if self.use_bloom:
-            n_bits = self.n_bits
-
-            def build(pdf: pd.DataFrame) -> pd.DataFrame:
-                pid = int(pdf["partition_id"].iloc[0])
-                blob = bloom_build(pdf["url_canon"], n_bits)
-                return pd.DataFrame(
-                    {
-                        "partition_id": [pid],
-                        "round": [round_no],
-                        "n_items": [len(pdf)],
-                        "filter": [blob],
-                    }
-                )
-
-            blobs = rows.groupBy("partition_id").applyInPandas(build, schema=SEEN_FILTERS)
-            self.store.append(self.filters_table, blobs)
-
-    def compact_filters(self, round_no: int) -> None:
-        """OR-merge each partition's accumulated per-round blobs into
-        one. Without this, filter_unseen reads O(rounds) blobs per
-        partition per round — at a long crawl that read amplification
-        dominates the probe cost."""
-        filters = self.store.read_or_empty(self.filters_table, SEEN_FILTERS)
-        n_bits = self.n_bits
-
-        def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    "partition_id": [int(pdf["partition_id"].iloc[0])],
-                    "round": [round_no],
-                    "n_items": [int(pdf["n_items"].sum())],
-                    "filter": [bloom_merge(list(pdf["filter"]), n_bits)],
-                }
-            )
-
-        merged = filters.groupBy("partition_id").applyInPandas(merge, schema=SEEN_FILTERS)
-        self.store.overwrite(self.filters_table, merged)

@@ -13,7 +13,6 @@ from pyspark.sql import SparkSession
 
 from .loop import ALL_TABLES
 from .schemas import TABLE_SCHEMAS
-from .seen import SEEN_FILTERS
 
 
 def _schema_for(name: str):
@@ -27,8 +26,6 @@ def _schema_for(name: str):
         from .schemas import FETCH_CACHE
 
         return FETCH_CACHE
-    if name == "phash_filters":
-        return SEEN_FILTERS
     raise KeyError(name)
 
 

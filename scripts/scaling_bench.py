@@ -13,7 +13,7 @@ GIANT synthetic frontier (default 20M rows, lazily generated from
 spark.range — never materialized driver-side, exactly how a 10^10-row
 frontier must be handled): budgeted priority pop over ~50k hosts →
 fetch of the ~1M in-budget URLs (detail pages + image payloads) → item
-extraction + image materialization → seen-set insert + bloom build →
+extraction + image materialization → seen-set append →
 pop-tombstone append (the incremental-frontier design: deferral writes
 nothing, so the 19M deferred rows cost zero write I/O — the round-1
 design rewrote them all every round).

@@ -1,5 +1,5 @@
-"""Bloom-blob compaction must be content-equivalent: the engine's
-outputs with periodic compaction equal an uncompacted run."""
+"""State compaction must be content-equivalent: the engine's outputs
+with periodic compaction equal an uncompacted run."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import hashlib
 
 from pyspider_spark import loop as loop_mod
 from pyspider_spark.loop import CrawlEngine
-from pyspider_spark.schemas import IMAGES, ITEMS, SEEN, SEEN_FILTERS
+from pyspider_spark.schemas import IMAGES, ITEMS, SEEN
 from pyspider_spark.synth import GraphSpec
 
 SPEC = GraphSpec(n_hosts=2, chains_per_host=2, seed_tag="compact1")
@@ -31,11 +31,6 @@ def test_compaction_equivalence(spark, tmp_path_factory, monkeypatch):
 
     for t, s in [("seen", SEEN), ("items", ITEMS), ("images", IMAGES)]:
         assert digest(a, t, s) == digest(b, t, s), t
-    # compacted filters: exactly one blob per populated partition
-    fa = a.store.read_or_empty("seen_filters", SEEN_FILTERS)
-    per_part = fa.groupBy("partition_id").count().collect()
-    # last compaction at round 5; rounds after it append one blob each
-    assert max(r["count"] for r in per_part) <= 1 + 1  # merged + ≤1 round since
 
 
 def test_fetch_cache_compaction_bounded_and_equivalent(
@@ -76,20 +71,3 @@ def test_fetch_cache_compaction_bounded_and_equivalent(
     assert fc.groupBy("url_canon").count().agg(
         F.max("count")
     ).collect()[0][0] == 1
-
-
-def test_seen_filter_probe_equivalent_after_compaction(spark, tmp_path_factory):
-    wd = str(tmp_path_factory.mktemp("probe"))
-    eng = CrawlEngine(spark, wd, SPEC, n_seen_partitions=4)
-    eng.run(max_rounds=4)
-    from pyspark.sql import functions as F
-
-    cands = (
-        eng.store.read_or_empty("seen", SEEN)
-        .select("url_canon")
-        .unionByName(spark.createDataFrame([("https://nowhere.example/x",)], ["url_canon"]))
-    )
-    before = {r.url_canon for r in eng.seen.filter_unseen(cands).collect()}
-    eng.seen.compact_filters(99)
-    after = {r.url_canon for r in eng.seen.filter_unseen(cands).collect()}
-    assert before == after == {"https://nowhere.example/x"}

@@ -24,7 +24,7 @@ def engine_run(spark, tmp_path_factory, request):
     (html_parser=True) must be byte-identical end-to-end."""
     wd = str(tmp_path_factory.mktemp(f"crawl_{request.param}"))
     eng = CrawlEngine(
-        spark, wd, SPEC, n_seen_partitions=8, use_bloom=True,
+        spark, wd, SPEC, n_seen_partitions=8,
         collect_pop_sequence=True, html_parser=request.param,
     )
     stats = eng.run(max_rounds=ROUNDS)
@@ -64,6 +64,23 @@ def test_seen_set_matches(engine_run, oracle_run):
         r.url_canon for r in eng.store.read_or_empty("seen", SEEN).collect()
     }
     assert seen == o.seen
+
+
+def test_membership_tables_unique_and_exact(engine_run):
+    """The vet probe is one left join against ``enqueued`` and the
+    per-round registrations are plain appends, so the join is only a
+    membership test while each set holds one row per url_canon. No
+    approximate-filter table is written beside them."""
+    import os
+
+    eng, _ = engine_run
+    for t in ("enqueued", "seen"):
+        df = eng.store.read_or_empty(t, SEEN)
+        total = df.count()
+        assert total > 0, t
+        assert df.select("url_canon").distinct().count() == total, t
+    for t in ("seen_filters", "enqueued_filters"):
+        assert not os.path.exists(os.path.join(eng.workdir, t)), t
 
 
 def test_items_match(engine_run, oracle_run):
@@ -144,7 +161,7 @@ def budgeted_runs(spark, tmp_path_factory):
     exercises the threshold-probe cap over the cached in-budget frame."""
     wd = str(tmp_path_factory.mktemp("crawl_gb"))
     eng = CrawlEngine(
-        spark, wd, SPEC, n_seen_partitions=8, use_bloom=True,
+        spark, wd, SPEC, n_seen_partitions=8,
         collect_pop_sequence=True, global_budget=5,
     )
     stats = eng.run(max_rounds=4)
@@ -181,7 +198,7 @@ def ingest_runs(spark, tmp_path_factory):
     ]
     wd = str(tmp_path_factory.mktemp("crawl_ingest"))
     eng = CrawlEngine(
-        spark, wd, SPEC, n_seen_partitions=8, use_bloom=True,
+        spark, wd, SPEC, n_seen_partitions=8,
         collect_pop_sequence=True,
     )
     eng.run(max_rounds=2)
@@ -238,7 +255,7 @@ def delayed_runs(spark, tmp_path_factory):
     spec = GraphSpec(n_hosts=3, chains_per_host=2, crawl_delay_host0=30.0)
     wd = str(tmp_path_factory.mktemp("crawl_delay"))
     eng = CrawlEngine(
-        spark, wd, spec, n_seen_partitions=8, use_bloom=True,
+        spark, wd, spec, n_seen_partitions=8,
         collect_pop_sequence=True,
     )
     stats = eng.run(max_rounds=5)

@@ -276,6 +276,21 @@ def test_sniff_decode_bom_wins():
     assert H.sniff_decode("﻿ab".encode("utf-16-be")[0:]) == "ab"
 
 
+def test_sniff_decode_utf32_bom_not_taken_for_utf16():
+    """The UTF-32-LE mark (FF FE 00 00) starts with the UTF-16-LE one
+    (FF FE): sniffed as UTF-16 it would decode to NUL-interleaved text,
+    even with a header that declares another charset."""
+    import codecs
+
+    body = "h\xe9llo \U0001f600".encode("utf-32-le")
+    assert H.sniff_decode(codecs.BOM_UTF32_LE + body) == "h\xe9llo \U0001f600"
+    assert H.sniff_decode(codecs.BOM_UTF32_LE + body, "text/html; charset=utf-8") == (
+        "h\xe9llo \U0001f600"
+    )
+    body_be = "h\xe9llo".encode("utf-32-be")
+    assert H.sniff_decode(codecs.BOM_UTF32_BE + body_be) == "h\xe9llo"
+
+
 def test_sniff_decode_header_charset():
     body = "caf\xe9".encode("latin-1")
     assert H.sniff_decode(body, "text/html; charset=ISO-8859-1") == "caf\xe9"

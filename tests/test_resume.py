@@ -112,30 +112,6 @@ def test_fresh_run_on_used_workdir_refuses(runs, spark):
         fresh.run(max_rounds=2)
 
 
-def test_seen_geometry_pinned_per_workdir(runs, spark):
-    """The seen set's partition count / bloom bits are persistent
-    properties of the stored blobs: reopening with different values
-    must raise instead of silently breaking dedup (a seen URL would
-    probe a blob that never contained it and re-crawl)."""
-    eng_a, _eng_b = runs
-    wd_a = eng_a.workdir
-    with pytest.raises(ValueError, match="n_partitions"):
-        CrawlEngine(spark, wd_a, SPEC, n_seen_partitions=8)
-    # bloom off -> on is also unsafe: rows added while off have no
-    # blobs, and a missing blob reads as 'definitely new'
-    from pyspider_spark.seen import SeenSet
-    from pyspider_spark.tables import TableStore
-
-    store = TableStore(spark, wd_a)
-    no_bloom = SeenSet(store, n_partitions=4, use_bloom=False, table="aux",
-                       filters_table="aux_filters")
-    no_bloom.add(spark.createDataFrame([("https://h/x",)], ["url_canon"]), 0,
-                 assume_new=True)
-    with pytest.raises(ValueError, match="use_bloom"):
-        SeenSet(store, n_partitions=4, use_bloom=True, table="aux",
-                filters_table="aux_filters")
-
-
 def test_ledger_jsonl_torn_tail_and_legacy(runs, spark, tmp_path):
     """The round ledger is JSONL with O(1) appends: a torn final line
     (crash mid-append) reads as 'round not committed'; a legacy
