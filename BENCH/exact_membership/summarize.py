@@ -4,16 +4,20 @@ per-workload medians, the parent's quartile spread and pair wins.
 Each line is ``{"side": "parent"|"change", "wl": ..., "seed": N,
 "res": <last stdout line of perfbench/run.py --trace 0>}``.
 
-    python3 BENCH/exact_membership/summarize.py
+    python3 BENCH/exact_membership/summarize.py [path/to/ab_untraced.jsonl]
+
+With no argument it reads the file next to this script.
 """
 
 import json
 import os
 import statistics as st
+import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 
-with open(os.path.join(HERE, "ab_untraced.jsonl")) as f:
+path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(HERE, "ab_untraced.jsonl")
+with open(path) as f:
     rows = [json.loads(line) for line in f]
 for wl in ("crawl_deep", "crawl_wide"):
     by = {}

@@ -24,8 +24,9 @@ per element.)
 Scale notes (100 TB):
 - Signatures are per-row, no shuffle: one Arrow-batched pass per doc
   batch (shingle_minhash_udf — hashlib per shingle + an int64 affine
-  matmul), with the pure-SQL construction kept as the oracle-shaped
-  reference (minhash_signature_sql). Band keys are codegen md5.
+  matmul); the pure-SQL construction that pins it bit for bit is
+  ``tests/dedup_reference.minhash_signature_sql``. Band keys are
+  codegen md5.
 - LSH candidate generation shuffles once on the band key — the whole
   point of banding is that this shuffle is tiny (4 rows/doc) compared
   with the quadratic all-pairs join it replaces; band-key hot spots
@@ -115,18 +116,6 @@ def h32_duck(arg_sql: str) -> str:
     return f"(('0x' || substr(md5({arg_sql}), 1, 8))::BIGINT)"
 
 
-def _shingle_sql(tokens_sql: str, k: int) -> str:
-    """Spark-SQL: distinct hashed k-token shingles of a token array.
-    Docs shorter than k yield an empty array (guarded — Spark's
-    sequence(1, 0) would count DOWN)."""
-    joined = f"array_join(slice({tokens_sql}, i, {k}), ' ')"
-    return (
-        f"case when size({tokens_sql}) >= {k} then "
-        f"array_distinct(transform(sequence(1, size({tokens_sql}) - {k - 1}), "
-        f"i -> {h32_sql(joined)})) else array() end"
-    )
-
-
 def _shingle_duck(tokens_sql: str, k: int) -> str:
     joined = f"array_to_string({tokens_sql}[i:i+{k - 1}], ' ')"
     return (
@@ -138,10 +127,6 @@ def _shingle_duck(tokens_sql: str, k: int) -> str:
 
 TOKENS_SQL = r"split(trim(text), '\\s+')"
 TOKENS_DUCK = r"string_split_regex(trim(text), '\s+')"
-
-
-def with_shingles(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
-    return docs.withColumn("shingles", F.expr(_shingle_sql(TOKENS_SQL, k)))
 
 
 # ---- vectorized shingle+minhash path (the 10^9-doc hot loop) ----
@@ -161,7 +146,7 @@ def with_shingles(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
 #     keeps leading/trailing empty tokens
 #   - array_distinct: first-occurrence order (order is immaterial
 #     downstream — min-fold and set-intersect only — but kept equal)
-# Bit equality with the SQL path is pinned by
+# Bit equality with the SQL path (tests/dedup_reference.py) is pinned by
 # tests/test_oracle_parity.py::test_minhash_udf_matches_sql, and
 # transitively by the d_minhash_sig / d_minhash_pairs DuckDB oracles.
 
@@ -169,7 +154,8 @@ _JAVA_WS = None  # compiled lazily inside the UDF worker
 
 
 def _shingle_hashes_py(text, k: int) -> list[int]:
-    """Exact Python mirror of _shingle_sql over TOKENS_SQL."""
+    """Exact Python mirror of the SQL shingle transform over TOKENS_SQL
+    (``tests/dedup_reference.shingle_sql``)."""
     import hashlib
     import re
 
@@ -235,8 +221,8 @@ def minhash_signature(
     ≥k tokens). Shingle hashes and minhashes come from ONE Arrow-batched
     UDF pass (see shingle_minhash_udf); band keys are plain codegen md5
     over the extracted mh columns. Values are bit-identical to the
-    reference SQL construction (minhash_signature_sql), which the
-    DuckDB oracles replay."""
+    reference SQL construction the DuckDB oracles replay
+    (``tests/dedup_reference.minhash_signature_sql``)."""
     assert n_minhash % n_bands == 0, "bands must tile the signature"
     sm = shingle_minhash_udf(k, n_minhash)
     df = (
@@ -248,40 +234,6 @@ def minhash_signature(
         "*",
         *[F.element_at("_sm.mhs", i + 1).alias(f"mh{i}") for i in range(n_minhash)],
     ).drop("_sm")
-    return _band_columns(df, n_minhash, n_bands)
-
-
-def minhash_signature_sql(
-    docs: DataFrame,
-    k: int = SHINGLE_K,
-    n_minhash: int = N_MINHASH,
-    n_bands: int = N_BANDS,
-) -> DataFrame:
-    """Pure-SQL reference construction of minhash_signature — the shape
-    the DuckDB oracle mirrors. Kept as the equivalence pin for the
-    Arrow-batched default (interpreted higher-order lambdas make it
-    several times slower; see shingle_minhash_udf).
-
-    All N minhashes come from ONE projection over the shingle array:
-    Spark has no common-subexpression elimination across lambda
-    columns, so N separate ``array_min(transform(shingles, ...))``
-    columns would each re-evaluate the md5 shingle extraction (~N× the
-    whole cost). The single `_mhs` array keeps one evaluation per row;
-    the per-column extracts are cheap element_at projections that
-    CollapseProject will not inline into duplicated work. Each
-    permutation is an affine map over the already-hashed shingles
-    (``minhash_affine_consts`` — one int64 multiply per element, not a
-    seeded md5 per (i, element))."""
-    assert n_minhash % n_bands == 0, "bands must tile the signature"
-    df = with_shingles(docs, k).filter(F.size("shingles") > 0)
-    perms = ", ".join(
-        f"array_min(transform(shingles, h -> ({a}L * h + {b}L) % {MINHASH_PRIME}L))"
-        for a, b in (minhash_affine_consts(i) for i in range(n_minhash))
-    )
-    df = df.withColumn("_mhs", F.expr(f"array({perms})"))
-    df = df.select(
-        "*", *[F.element_at("_mhs", i + 1).alias(f"mh{i}") for i in range(n_minhash)]
-    ).drop("_mhs")
     return _band_columns(df, n_minhash, n_bands)
 
 
@@ -394,39 +346,11 @@ def ngram_jaccard_pairs(
     the sf0.01 fixture: all 6 exact pairs ≥ .95 jaccard found, the one
     .05-jaccard pair missed); unlike the lang-blocked variant it also
     finds CROSS-language duplicates (19 extra true pairs on the same
-    fixture). The quadratic lang-blocked variant survives as
-    :func:`ngram_jaccard_pairs_exact` for tests/small data — at 100 TB
-    one language block is effectively the whole corpus, making it
-    O(n²)."""
+    fixture). The quadratic lang-blocked variant lives in
+    ``tests/dedup_reference.ngram_jaccard_pairs_exact`` as a recall
+    reference only — at 100 TB one language block is effectively the
+    whole corpus, making it O(n²)."""
     return minhash_near_dups(docs, threshold_bp=threshold_bp, k=k)
-
-
-def ngram_jaccard_pairs_exact(
-    docs: DataFrame, threshold_bp: int = 500, k: int = NGRAM_K
-) -> DataFrame:
-    """Direct pairwise n-gram Jaccard, blocked by ``lang`` (quadratic
-    within a block — test/reference variant; see ngram_jaccard_pairs
-    for the default scale path)."""
-    sh = with_shingles(docs, k).filter(F.size("shingles") > 0).select(
-        "doc_id", "lang", "shingles"
-    )
-    a = sh.select(
-        F.col("lang"),
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-    )
-    b = sh.select(
-        F.col("lang"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-    )
-    return (
-        a.join(b, on="lang")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("jaccard_bp", F.expr(jaccard_bp("sh_a", "sh_b")))
-        .filter(F.col("jaccard_bp") >= threshold_bp)
-        .select("doc_a", "doc_b", "jaccard_bp")
-    )
 
 
 def simhash(docs: DataFrame) -> DataFrame:

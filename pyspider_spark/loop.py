@@ -38,7 +38,6 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 from dataclasses import dataclass
 
 import pandas as pd
@@ -139,10 +138,8 @@ class CrawlEngine:
         global_budget: int | None = None,
         collect_pop_sequence: bool = False,
         fetch_cache_ttl_rounds: int | None = None,
-        detect_near_dup_images: bool = True,
         neardup_geometry: tuple[int, int] | None = None,
         html_parser: bool = False,
-        batch_sales: bool = True,
         transport: str = "sim",
         http_opts: dict | None = None,
         store=None,
@@ -163,7 +160,6 @@ class CrawlEngine:
         self.collect_pop_sequence = collect_pop_sequence
         self.pop_sequences: dict[int, list[str]] = {}
         self.fetch_cache_ttl_rounds = fetch_cache_ttl_rounds
-        self.detect_near_dup_images = detect_near_dup_images
         # (n_bands, band_bits) for the phash banded-LSH index. The
         # default 8x8 gives the full hamming<=7 lossless radius; at
         # large corpus sizes pass neardup.choose_geometry(corpus) —
@@ -175,10 +171,6 @@ class CrawlEngine:
         # detail_items_html) — byte-identical on the synthetic corpus,
         # required for arbitrary real pages (P5).
         self.html_parser = html_parser
-        # Q12 engine-level chunked batch fetch: roll each round's newly
-        # discovered skus into one sales request per chunk_size ids
-        # (reference jingxi_category_sales.py:112-118).
-        self.batch_sales = batch_sales
         # S4 transport: "sim" (deterministic oracle) or "http" (real
         # network — thread-pooled urllib per Arrow batch, fetch.py;
         # http_opts: timeout_s / pool_size / base_override).
@@ -206,16 +198,11 @@ class CrawlEngine:
     def _read_ledger(self) -> list[dict]:
         """Ledger entries, oldest first. JSONL (one entry per line):
         a torn final line from a crash mid-append parses as 'round not
-        committed' and is skipped — exactly the resume contract. The
-        legacy whole-array format is still readable."""
+        committed' and is skipped — exactly the resume contract."""
         if not os.path.exists(self._ledger_path):
             return []
+        entries = []
         with open(self._ledger_path) as f:
-            head = f.read(1)
-            f.seek(0)
-            if head == "[":  # legacy format (rewritten-array ledger)
-                return json.load(f)
-            entries = []
             for line in f:
                 line = line.strip()
                 if not line:
@@ -224,24 +211,13 @@ class CrawlEngine:
                     entries.append(json.loads(line))
                 except json.JSONDecodeError:
                     break  # torn tail — everything after is uncommitted
-            return entries
+        return entries
 
     def _append_ledger(self, entry: dict) -> None:
-        """O(1) fsync'd append — the previous rewrite-the-array commit
-        re-parsed and re-dumped the full history (with all lineage)
-        every round: O(rounds²) driver cost over a long crawl."""
-        p = self._ledger_path
-        if os.path.exists(p):
-            with open(p) as f:
-                if f.read(1) == "[":  # migrate a legacy array ledger once
-                    entries = self._read_ledger()
-                    tmp = f"{p}.tmp.{uuid.uuid4().hex}"
-                    with open(tmp, "w") as out:
-                        for e in entries:
-                            out.write(json.dumps(e, sort_keys=True) + "\n")
-                    os.rename(tmp, p)
+        """O(1) fsync'd append of one JSON line: a commit never re-reads
+        or rewrites the history."""
         line = json.dumps(entry, sort_keys=True)
-        with open(p, "a") as f:
+        with open(self._ledger_path, "a") as f:
             f.write(line + "\n")
             f.flush()
             os.fsync(f.fileno())
@@ -344,8 +320,9 @@ class CrawlEngine:
             self._write_round_outputs(r, stats, None, None, None, None, None)
             return stats
 
-        frontier = store.read_or_empty("frontier", FRONTIER)
-        ready, _parked = scheduler.split_ready(frontier, r)
+        ready = store.read_or_empty("frontier", FRONTIER).filter(
+            F.col("exetime") <= F.lit(r)
+        )
         # frontier ∖ popped: rows are pre-vetted at discovery time, so
         # exclusion of pop tombstones is the ONLY per-round read-side
         # maintenance; no dedup/seen/robots re-vetting of the backlog.
@@ -463,15 +440,15 @@ class CrawlEngine:
         links_fn = (
             stages.links_from_list_html if self.html_parser else stages.links_from_list
         )
-        new_links_raw = links_fn(ok).unionByName(
-            stages.links_from_api(parsed_api)
+        # Q12 engine-level chunked batch fetch: this round's skus roll
+        # up into one sales request per chunk_size ids (reference
+        # jingxi_category_sales.py:112-118) that enters the frontier
+        # like any discovered link
+        new_links_raw = (
+            links_fn(ok)
+            .unionByName(stages.links_from_api(parsed_api))
+            .unionByName(stages.sales_chunk_links(api_items, spec.sales_chunk_size))
         )
-        if self.batch_sales:
-            # Q12: this round's skus roll up into batch sales requests
-            # that enter the frontier like any discovered link
-            new_links_raw = new_links_raw.unionByName(
-                stages.sales_chunk_links(api_items, spec.sales_chunk_size)
-            )
         # vet counters are DEFERRED into the concurrent write phase
         # (count_fn shares the marked frame's cache blocks with the
         # frontier write) — the serial parse_vet phase only BUILDS plans
@@ -483,7 +460,7 @@ class CrawlEngine:
             stages.detail_items_html if self.html_parser else stages.detail_items
         )
         items = items_fn(ok, r)
-        sales = stages.sales_items(ok, r) if self.batch_sales else None
+        sales = stages.sales_items(ok, r)
         images = materialize_images(ok, spec)
 
         requeue_rows = (
@@ -537,12 +514,12 @@ class CrawlEngine:
         # this round (in-batch pairs both sides, corpus lookup, index
         # append, blob build) — round 2 re-ran the explode per op and
         # paid ~5 extra fixed-latency jobs per round at toy round sizes.
-        bands = idx.bands_of(new_imgs).persist()
+        bands = idx.band_rows(new_imgs).persist()
         t0 = time.perf_counter()
         pairs = neardup.pairs_from_bands(bands, bands, r, max_hamming=nb - 1)
         if idx.has_corpus():
             pairs = pairs.unionByName(
-                idx.pairs_vs_corpus_bands(bands, r)
+                idx.pairs_vs_corpus(bands, r)
             ).dropDuplicates(["image_id", "dup_of"])
         store.append(
             "near_dup_images",
@@ -551,7 +528,7 @@ class CrawlEngine:
         t1 = time.perf_counter()
         # index this round's images for future rounds' lookups (local
         # timing, not _mark: this runs inside a writer thread)
-        idx.append_round_bands(bands, r)
+        idx.append_round(bands, r)
         bands.unpersist()
         t2 = time.perf_counter()
         self.phase_times["nd_pairs"] = self.phase_times.get("nd_pairs", 0.0) + (t1 - t0)
@@ -855,7 +832,7 @@ class CrawlEngine:
             stats.images_landed = store.last_append_rows("images")
             # the band index is appended AFTER the corpus lookup inside,
             # so this round's images never match their own bands
-            if self.detect_near_dup_images and stats.images_landed > 0:
+            if stats.images_landed > 0:
                 self._detect_near_dups(r)
 
         lineage: list[dict] = []

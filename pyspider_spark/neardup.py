@@ -7,13 +7,15 @@ Design (banded LSH over the 64-bit perceptual hash):
 - the phash splits into 8 bands of 8 bits. Two images within hamming
   distance ≤ 7 MUST agree exactly on at least one band (pigeonhole), so
   banded equality is a lossless candidate filter for that radius.
-- a bloom filter over all previously-seen ``(band_id, band_value)``
-  keys is tiny (8 keys/image → even 10^10 images fit a few GiB at 1%
-  FPR; per-partition blobs at that scale — broadcast at ours) and
-  prunes brand-new images before any join: an image whose 8 band keys
-  all miss the bloom has NO near-dup among seen images.
-- surviving candidates join the images table on the band key; the exact
-  ``bit_count(xor)`` hamming check keeps true pairs.
+- bloom filters over all previously-seen ``(band_id, band_value)``
+  keys, one blob per band-key partition (``BandIndex``), are tiny (8
+  keys/image) and prune brand-new images before any join: an image
+  whose 8 band keys all miss the blooms has NO near-dup among seen
+  images. The engine takes this probe only once the stored band rows
+  exceed ``DIRECT_VERIFY_MAX_BAND_ROWS``; below it the probe costs more
+  than the corpus scan it would prune.
+- surviving candidates join the stored band rows on the band key; the
+  exact ``bit_count(xor)`` hamming check keeps true pairs.
 
 The crawl loop appends pairs to a ``near_dup_images`` table each round
 (non-destructive: the images table keeps every row; dedup policy is a
@@ -76,16 +78,7 @@ def bloom_build(keys: pd.Series, n_bits: int) -> bytes:
     return bits.tobytes()
 
 
-def bloom_merge(blobs: list[bytes], n_bits: int) -> bytes:
-    acc = np.zeros(n_bits // 8, dtype=np.uint8)
-    for b in blobs:
-        acc |= np.frombuffer(b, dtype=np.uint8)
-    return acc.tobytes()
-
-
-def bloom_maybe_contains(keys: pd.Series, blob: bytes | None, n_bits: int) -> pd.Series:
-    if blob is None:
-        return pd.Series(False, index=keys.index)
+def bloom_maybe_contains(keys: pd.Series, blob: bytes, n_bits: int) -> pd.Series:
     bits = np.frombuffer(blob, dtype=np.uint8)
     out = np.empty(len(keys), dtype=bool)
     for i, k in enumerate(keys):
@@ -121,8 +114,6 @@ NEAR_DUP_IMAGES = T.StructType(
     ]
 )
 
-PHASH_BLOOM_BITS = 1 << 20
-
 
 def band_keys(
     df: DataFrame,
@@ -150,37 +141,6 @@ def band_keys(
     return df.withColumn("band_key", F.explode(keys))
 
 
-def build_band_bloom(images: DataFrame, n_bits: int = PHASH_BLOOM_BITS) -> bytes:
-    """Bloom blob over every band key of the given images (driver-side
-    result, broadcast by value to the pre-filter)."""
-    keys = band_keys(images.select("phash")).select("band_key")
-
-    def build(pdf_iter):
-        for pdf in pdf_iter:
-            yield pd.DataFrame({"blob": [bloom_build(pdf["band_key"], n_bits)]})
-
-    blobs = keys.mapInPandas(
-        build, schema=T.StructType([T.StructField("blob", T.BinaryType())])
-    ).collect()
-    return bloom_merge([r.blob for r in blobs], n_bits)
-
-
-def bloom_prefilter(new_images: DataFrame, blob: bytes, n_bits: int = PHASH_BLOOM_BITS) -> DataFrame:
-    """Keep only new images with ≥1 band-key bloom hit (possible
-    near-dup among seen). Arrow-batched; ships only (image_id, phash)."""
-    slim = band_keys(new_images.select("image_id", "phash"))
-
-    def flag(pdf_iter):
-        for pdf in pdf_iter:
-            hit = bloom_maybe_contains(pdf["band_key"], blob, n_bits)
-            yield pdf[hit][["image_id"]]
-
-    hits = slim.mapInPandas(
-        flag, schema=T.StructType([T.StructField("image_id", T.StringType())])
-    ).dropDuplicates(["image_id"])
-    return new_images.join(hits, on="image_id", how="left_semi")
-
-
 N_BAND_PARTITIONS = 64
 BAND_BLOB_BITS_MIN = 1 << 14  # floor for one round's per-partition blob
 BITS_PER_KEY = 16  # ≈0.1% FPR at 5 hashes
@@ -189,7 +149,7 @@ SATURATION_DENSITY = 0.3  # set-bit fraction that forces a blob resize
 # Below this many stored band rows, the bloom probe + pid-collect cost
 # more than the corpus scan they prune (each is its own fixed-latency
 # Spark job; the probe also fans out Python workers) — verify directly
-# instead. Identical output either way; see pairs_vs_corpus_bands.
+# instead. Identical output either way; see BandIndex.pairs_vs_corpus.
 DIRECT_VERIFY_MAX_BAND_ROWS = 2_000_000
 
 
@@ -219,10 +179,8 @@ def _sized_bloom(keys: pd.Series, n_bits_floor: int) -> bytes:
 class BandIndex:
     """Incremental banded-LSH index over the image corpus (J5 at scale).
 
-    Replaces the round-1 design that re-exploded the ENTIRE images table
-    into band keys every round (O(corpus) scan+shuffle per round) and
-    OR-merged fixed 1 MiB driver-held blooms (which saturate and then
-    pass everything at ~10^5 images):
+    The images table is never re-exploded: each round indexes only its
+    NEW images, appending to two tables.
 
     - ``image_bands``: append-only (band_key, image_id, phash, pid),
       written once per round for that round's NEW images only, sorted by
@@ -232,21 +190,21 @@ class BandIndex:
       compaction; probes check each blob independently so
       blobs of different sizes coexist.
 
-    Round cost: candidate detection is a cogrouped bloom probe over the
-    NEW images' band keys (O(new)); the verify join reads only the
-    corpus partitions (pids) that candidates actually touch, with the
-    candidate side broadcast — the corpus side never shuffles.
+    Round cost (see :meth:`pairs_vs_corpus`): the verify join
+    broadcasts the new images' band rows against a corpus scan that
+    never shuffles. Above DIRECT_VERIFY_MAX_BAND_ROWS a cogrouped bloom
+    probe over the new band keys (O(new)) first narrows the candidates,
+    and the scan reads only the pids they touch.
     """
 
-    def __init__(self, store, bands_table: str = "image_bands",
-                 filters_table: str = "phash_filters",
-                 n_bands: int = N_BANDS, band_bits: int = BAND_BITS):
+    bands_table = "image_bands"
+    filters_table = "phash_filters"
+
+    def __init__(self, store, n_bands: int = N_BANDS, band_bits: int = BAND_BITS):
         from .schemas import IMAGE_BANDS, PHASH_FILTERS
 
         assert n_bands * band_bits == 64, "bands must tile the 64-bit phash"
         self.store = store
-        self.bands_table = bands_table
-        self.filters_table = filters_table
         self.n_bands = n_bands
         self.band_bits = band_bits
         self._BANDS = IMAGE_BANDS
@@ -304,7 +262,10 @@ class BandIndex:
 
         return build
 
-    def _bands_of(self, images: DataFrame) -> DataFrame:
+    def band_rows(self, images: DataFrame) -> DataFrame:
+        """(band_key, image_id, phash, pid): n_bands rows per image.
+        The engine computes this ONCE per round, persists it, and feeds
+        it to every index operation below so the explode runs once."""
         return (
             band_keys(
                 images.select("image_id", "phash"),
@@ -315,24 +276,11 @@ class BandIndex:
             .select("band_key", "image_id", "phash", "pid")
         )
 
-    def bands_of(self, images: DataFrame) -> DataFrame:
-        """Public band-row projection — callers that feed several index
-        operations in one round (the engine's _detect_near_dups) compute
-        this ONCE, persist it, and pass it to the ``*_bands`` variants
-        below so the explode doesn't re-run per operation."""
-        return self._bands_of(images)
-
-    def append_round(self, new_images: DataFrame, round_no: int) -> None:
-        """Index this round's new images: append their band rows (sorted
-        by pid for stats pruning) and one right-sized bloom blob per
-        touched partition."""
-        self.append_round_bands(self._bands_of(new_images), round_no)
-
-    def append_round_bands(self, bands: DataFrame, round_no: int) -> None:
-        """append_round over a precomputed (ideally persisted) band
-        frame: the blob build groups the SAME frame instead of
-        re-reading the just-written append from disk — one fewer
-        table scan per round on the crawl's hot path."""
+    def append_round(self, bands: DataFrame, round_no: int) -> None:
+        """Index this round's new images from their band rows: append
+        the rows (sorted by pid for stats pruning) and one right-sized
+        bloom blob per touched partition. The blob build groups the SAME
+        frame instead of re-reading the just-written append."""
         self._record_geometry()
         self.store.append(self.bands_table, bands.sort("pid"))
         blobs = bands.groupBy("pid").applyInPandas(
@@ -347,8 +295,6 @@ class BandIndex:
         """image_ids with ≥1 band key maybe-present in the corpus blooms
         — cogrouped per-partition probe over a precomputed band frame,
         ships only (image_id, band_key)."""
-        from pyspark.sql import types as T
-
         filters = self.store.read_or_empty(self.filters_table, self._FILTERS)
         slim = bands.select(
             "image_id", "band_key", F.col("pid").alias("_pid")
@@ -375,14 +321,8 @@ class BandIndex:
             .dropDuplicates(["image_id"])
         )
 
-    def candidate_images(self, new_images: DataFrame) -> DataFrame:
-        """New images with ≥1 band key maybe-present in the corpus."""
-        ids = self._probe_ids(self._bands_of(new_images))
-        return new_images.join(ids, on="image_id", how="left_semi")
-
     def _verify_join(
-        self, cand_bands: DataFrame, round_no: int, max_hamming: int,
-        pids: list[int] | None,
+        self, cand_bands: DataFrame, round_no: int, pids: list[int] | None
     ) -> DataFrame:
         """Exact verify: candidate band rows (broadcast) against the
         stored corpus band rows. The corpus side is a columnar scan —
@@ -408,27 +348,12 @@ class BandIndex:
                 "dup_of",
                 F.expr("cast(bit_count(ph_a ^ ph_b) as int)").alias("hamming"),
             )
-            .filter(F.col("hamming") <= max_hamming)
+            .filter(F.col("hamming") <= self.n_bands - 1)
             .dropDuplicates(["image_id", "dup_of"])
             .withColumn("round", F.lit(round_no).cast("int"))
         )
 
-    def pairs_vs_corpus(
-        self, cand_images: DataFrame, round_no: int, max_hamming: int | None = None
-    ) -> DataFrame:
-        """Exact verify of candidate IMAGES against the corpus (band
-        explode inside; see _verify_join for the plan shape)."""
-        if max_hamming is None:
-            max_hamming = self.n_bands - 1
-        a = self._bands_of(cand_images)
-        pids = [r["pid"] for r in a.select("pid").distinct().collect()]
-        if not pids:
-            return cand_images.sparkSession.createDataFrame([], NEAR_DUP_IMAGES)
-        return self._verify_join(a, round_no, max_hamming, pids)
-
-    def pairs_vs_corpus_bands(
-        self, bands: DataFrame, round_no: int, max_hamming: int | None = None
-    ) -> DataFrame:
+    def pairs_vs_corpus(self, bands: DataFrame, round_no: int) -> DataFrame:
         """One-call corpus lookup over a precomputed (persisted) band
         frame — the engine's per-round path, tuned for job COUNT:
 
@@ -443,16 +368,14 @@ class BandIndex:
           verify only probed candidates with the pid IN-prune — the
           100 TB shape, where the corpus scan is the thing to avoid.
         """
-        if max_hamming is None:
-            max_hamming = self.n_bands - 1
         if self.store.count_rows(self.bands_table) <= DIRECT_VERIFY_MAX_BAND_ROWS:
-            return self._verify_join(bands, round_no, max_hamming, pids=None)
+            return self._verify_join(bands, round_no, pids=None)
         ids = self._probe_ids(bands)
         cand_bands = bands.join(ids, on="image_id", how="left_semi")
         pids = [r["pid"] for r in cand_bands.select("pid").distinct().collect()]
         if not pids:
             return bands.sparkSession.createDataFrame([], NEAR_DUP_IMAGES)
-        return self._verify_join(cand_bands, round_no, max_hamming, pids)
+        return self._verify_join(cand_bands, round_no, pids)
 
     def compact(self, round_no: int) -> None:
         """Rebuild one right-sized blob per partition from the stored
@@ -470,15 +393,13 @@ def near_dup_pairs(
     corpus: DataFrame,
     round_no: int,
     max_hamming: int | None = None,
-    cross: bool = False,
     n_bands: int = N_BANDS,
     band_bits: int = BAND_BITS,
 ) -> DataFrame:
     """(image_id, dup_of, hamming) for every new image within
     ``max_hamming`` (default: the geometry's lossless radius n_bands-1)
-    of a corpus image. ``cross=False`` = self-join semantics (id > id
-    avoids self/mirror pairs); ``cross=True`` = the two sides are
-    different sets, keep all non-identical pairs."""
+    of a corpus image, with self-join semantics (id > id avoids
+    self/mirror pairs)."""
     if max_hamming is None:
         max_hamming = n_bands - 1
     a = band_keys(
@@ -487,7 +408,7 @@ def near_dup_pairs(
     b = band_keys(
         corpus.select("image_id", "phash"), n_bands=n_bands, band_bits=band_bits
     )
-    return pairs_from_bands(a, b, round_no, max_hamming=max_hamming, cross=cross)
+    return pairs_from_bands(a, b, round_no, max_hamming=max_hamming)
 
 
 def pairs_from_bands(
@@ -495,7 +416,6 @@ def pairs_from_bands(
     b_bands: DataFrame,
     round_no: int,
     max_hamming: int,
-    cross: bool = False,
 ) -> DataFrame:
     """near_dup_pairs over precomputed band frames (columns band_key,
     image_id, phash) — callers that already materialized the explode
@@ -506,14 +426,9 @@ def pairs_from_bands(
     b = b_bands.select(
         "band_key", F.col("image_id").alias("dup_of"), F.col("phash").alias("ph_b")
     )
-    pair_filter = (
-        (F.col("image_id") != F.col("dup_of"))
-        if cross
-        else (F.col("image_id") > F.col("dup_of"))
-    )
     return (
         a.join(b, on="band_key")
-        .filter(pair_filter)
+        .filter(F.col("image_id") > F.col("dup_of"))
         .select(
             "image_id",
             "dup_of",

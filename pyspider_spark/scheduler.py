@@ -43,13 +43,6 @@ def with_salt(df: DataFrame) -> DataFrame:
     )
 
 
-def split_ready(frontier: DataFrame, round_no: int):
-    """Rows due this round vs rows parked for a later round."""
-    ready = frontier.filter(F.col("exetime") <= F.lit(round_no))
-    not_ready = frontier.filter(F.col("exetime") > F.lit(round_no))
-    return ready, not_ready
-
-
 def dedup_batch(ready: DataFrame) -> DataFrame:
     """One row per url_canon within the batch: keep the best by
     (priority desc, exetime asc, retries desc, round_added asc, stage,
@@ -80,21 +73,11 @@ def dedup_batch(ready: DataFrame) -> DataFrame:
     return best.select("url_canon", *[F.col(f"_b.{c}").alias(c) for c in others])
 
 
-def robots_filter(ready: DataFrame, robots: DataFrame):
-    """Drop rows matching a disallow prefix for their host. robots is a
-    small dim → broadcast; prefix match via startswith. Returns
-    (allowed, blocked_count_df). North-rule addition (absent in the
-    reference)."""
-    marked = robots_mark(ready, robots)
-    allowed = marked.filter(~F.col("_blk")).drop("_blk")
-    blocked = marked.filter(F.col("_blk")).drop("_blk")
-    return allowed, blocked
-
-
 def robots_mark(ready: DataFrame, robots: DataFrame) -> DataFrame:
-    """Add a ``_blk`` flag instead of splitting — lets the caller carry
-    blocked rows through the pop ranking (sorted last, never popped) so
-    one materialization serves the popped/deferred/blocked counters."""
+    """Flag rows whose URL matches a disallow prefix for their host
+    (``_blk``) instead of dropping them, so one materialization serves
+    both the survivors and the blocked counter. robots is a small dim →
+    broadcast. North-rule addition (absent in the reference)."""
     # ONE dim row per host (prefixes aggregated into an array): a plain
     # prefix-join would emit one row per MATCHING rule, so a URL under
     # two overlapping disallows (/priv + /private/) would duplicate —
@@ -156,24 +139,17 @@ def effective_config(config: DataFrame, robots: DataFrame) -> DataFrame:
 BIG_HOST_ROWS = 100_000  # backlog size above which a host takes the salted path
 
 
-def rank_for_pop(
-    ready: DataFrame,
-    config: DataFrame,
-    global_budget: int | None = None,
-    salted: bool = True,
-) -> DataFrame:
-    """Budgeted pop decision as ONE ranked DataFrame with a boolean
-    ``_pop`` column — so the caller persists a single frame and both the
-    popped and deferred splits read the cache (the windows run once, not
-    once per split).
+def rank_for_pop(ready: DataFrame, config: DataFrame, salted: bool = True) -> DataFrame:
+    """Per-host budgeted pop decision as ONE ranked DataFrame with a
+    boolean ``_pop`` column.
 
     ``salted=True``: two-stage skew-killed ranking — salted pre-rank on
     (host, salt) caps each bucket at the budget, then the exact per-host
     rank runs on ≤ N_SALT x budget rows/host. Two shuffles, safe for a
     host with a 10M-row backlog.
     ``salted=False``: single exact per-host window — one shuffle; for
-    inputs known to have no giant host. :func:`rank_adaptive` picks per
-    host at runtime.
+    hosts known not to be giant. :func:`popped_via_thresholds` picks per
+    host.
     """
     budgets = F.broadcast(
         config.select(
@@ -185,20 +161,14 @@ def rank_for_pop(
     )
     df = df.withColumn("_budget", F.coalesce(F.col("_budget"), F.lit(DEFAULT_BUDGET)))
     df = with_salt(df)
-    # rows carrying a truthy `_blk` column (robots-blocked) sort last in
-    # every window, never occupy a budget slot, and never set _pop —
-    # they ride along purely so the caller counts them from this frame.
-    blk = F.col("_blk") if "_blk" in df.columns else F.lit(False)
 
     if salted:
         # Stage 1 (skew kill): cap each (host, salt) bucket at the budget.
-        w_salt = Window.partitionBy("host", "salt").orderBy(
-            blk.cast("int").asc(), *pop_order()
-        )
+        w_salt = Window.partitionBy("host", "salt").orderBy(*pop_order())
         df = df.withColumn("_srn", F.row_number().over(w_salt))
-        salt_ok = ~blk & (F.col("_srn") <= F.col("_budget"))
+        salt_ok = F.col("_srn") <= F.col("_budget")
     else:
-        salt_ok = ~blk
+        salt_ok = F.lit(True)
 
     # Exact per-host rank; survivors order first so their relative rank
     # equals the rank they'd get ranked alone.
@@ -208,14 +178,9 @@ def rank_for_pop(
     df = df.withColumn("_hrn", F.row_number().over(w_host))
     host_ok = salt_ok & (F.col("_hrn") <= F.col("_budget"))
 
-    df = df.withColumn("_pop", host_ok).drop(
+    return df.withColumn("_pop", host_ok).drop(
         *[c for c in ("_budget", "_srn", "_hrn") if c in df.columns]
     )
-    # Global cap (ref spop count=1000) — threshold-based, never an
-    # unpartitioned window over the full backlog.
-    if global_budget is not None:
-        df = apply_global_budget(df, global_budget)
-    return df
 
 
 def apply_global_budget(ranked: DataFrame, global_budget: int) -> DataFrame:
@@ -273,13 +238,11 @@ def _pop_key():
 
 
 def popped_via_thresholds(
-    candidates: DataFrame,
-    config: DataFrame,
-    big_hosts: list[str] | None = None,
+    candidates: DataFrame, config: DataFrame, big_hosts: list[str]
 ) -> DataFrame:
     """The engine's pop path: per-host budgeted top-B WITHOUT shuffling
     full-width frontier rows. Byte-identical to
-    ``rank_adaptive(...).filter(_pop)`` whenever ``url_canon`` is unique
+    ``rank_for_pop(...).filter(_pop)`` whenever ``url_canon`` is unique
     within the candidate batch (the engine guarantees this: links are
     vetted/deduped at discovery and pop tombstones are keyed
     (url_canon, retries), so at most one row per URL is ever live).
@@ -295,11 +258,19 @@ def popped_via_thresholds(
     all; per-host rank <= B ⟺ key <= threshold because the pop order
     is total within a host (url_canon tie-break).
 
-    ``big_hosts`` routes skewed hosts through the salted two-stage
-    pre-rank exactly as :func:`rank_adaptive` does (the slim frame
-    carries url_canon, so the hash salt is identical)."""
+    ``big_hosts`` (the engine's per-host count pre-pass lists hosts over
+    BIG_HOST_ROWS) take the salted two-stage pre-rank; every other host
+    takes the single exact window. The salted path is an exact-rank-
+    preserving pre-filter, so the split changes cost, never output (the
+    slim frame carries url_canon, so the hash salt is identical)."""
     slim = candidates.select("host", "priority", "exetime", "url_canon")
-    ranked = rank_adaptive(slim, config, None, big_hosts=list(big_hosts or []))
+    if big_hosts:
+        is_big = F.col("host").isin(list(big_hosts))
+        ranked = rank_for_pop(slim.filter(~is_big), config, salted=False).unionByName(
+            rank_for_pop(slim.filter(is_big), config, salted=True)
+        )
+    else:
+        ranked = rank_for_pop(slim, config, salted=False)
     thr = (
         ranked.filter(F.col("_pop"))
         .groupBy("host")
@@ -310,77 +281,6 @@ def popped_via_thresholds(
         .filter(_pop_key() <= F.col("_thr"))
         .drop("_thr")
     )
-
-
-def rank_adaptive(
-    ready: DataFrame,
-    config: DataFrame,
-    global_budget: int | None = None,
-    big_host_rows: int = BIG_HOST_ROWS,
-    count_on: DataFrame | None = None,
-    big_hosts: list[str] | None = None,
-) -> DataFrame:
-    """Adaptive skew guard: a cheap slim pre-pass (groupBy(host).count()
-    — map-side combined, shuffles one row per host) finds hosts whose
-    backlog exceeds ``big_host_rows``; only their rows pay the two-stage
-    salted ranking. The common case (no giant host) costs ONE window
-    shuffle instead of two. Results are identical either way: the salted
-    path is an exact-rank-preserving pre-filter.
-
-    A global budget composes cleanly on top (threshold cap, see
-    :func:`apply_global_budget`): the pop order is total, so the
-    adaptive small/big split cannot change which rows clear the
-    threshold.
-
-    ``count_on``: frame to measure per-host backlog on. Pass a CHEAPER
-    superset of ``ready`` (e.g. the raw frontier scan before the
-    dedup/membership chain) so the pre-pass doesn't materialize an expensive
-    lineage twice; over-counting only salts a host that didn't need it.
-
-    ``big_hosts``: precomputed over-threshold host list — callers that
-    already run a per-host count job (the engine folds it into the
-    candidate-count job, loop.run_round) pass it to skip the pre-pass
-    entirely.
-    """
-    if global_budget is not None:
-        ranked = rank_adaptive(ready, config, None, big_host_rows, count_on, big_hosts)
-        return apply_global_budget(ranked, global_budget)
-    if big_hosts is not None:
-        big = list(big_hosts)
-    else:
-        base = count_on if count_on is not None else ready
-        big = [
-            r["host"]
-            for r in base.groupBy("host").count().filter(F.col("count") > big_host_rows).collect()
-        ]
-    if not big:
-        return rank_for_pop(ready, config, None, salted=False)
-    is_big = F.col("host").isin(big)
-    ranked_small = rank_for_pop(ready.filter(~is_big), config, None, salted=False)
-    ranked_big = rank_for_pop(ready.filter(is_big), config, None, salted=True)
-    return ranked_small.unionByName(ranked_big)
-
-
-def pop(
-    ready: DataFrame,
-    config: DataFrame,
-    round_no: int,
-    global_budget: int | None = None,
-    ranked: DataFrame | None = None,
-):
-    """Split a ranked frame (see :func:`rank_for_pop`) into
-    (popped, deferred); deferred rows carry exetime = round_no + 1 and
-    vetted = true (they skip re-vetting on re-entry)."""
-    if ranked is None:
-        ranked = rank_for_pop(ready, config, global_budget)
-    popped = ranked.filter(F.col("_pop")).drop("_pop")
-    deferred = (
-        ranked.filter(~F.col("_pop"))
-        .drop("_pop")
-        .withColumn("exetime", F.lit(round_no + 1).cast("long"))
-        .withColumn("vetted", F.lit(True))
-    )
-    return popped, deferred
 
 
 def fetch_outcome_predicates(captcha_marker: str) -> dict:

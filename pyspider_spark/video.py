@@ -122,11 +122,13 @@ def decode_avi_rgb24(data: bytes) -> tuple[np.ndarray, int]:
     """AVI bytes → ((n, h, w, 3) uint8 RGB, fps). Real chunk walk:
     finds hdrl/strl for geometry + rate, collects '00db' (uncompressed
     DIB) movi chunks in order. Raises ValueError on non-AVI, non-24bpp,
-    or compressed (biCompression != BI_RGB) streams."""
+    or compressed (biCompression != BI_RGB) streams, and on a missing
+    'vids' stream header (strh) or a zero rate scale: the frame rate
+    is then unknown, and a guessed one would skew every time-based
+    feature while the row still reported decode_ok=True."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not a RIFF/AVI payload")
-    w = h = None
-    fps = FPS
+    w = h = fps = None
     frames_raw: list[bytes] = []
 
     def walk_list(start: int, end: int) -> None:
@@ -162,6 +164,8 @@ def decode_avi_rgb24(data: bytes) -> tuple[np.ndarray, int]:
     walk_list(12, len(data))
     if w is None or h is None:
         raise ValueError("no video stream format (strf) found")
+    if fps is None:
+        raise ValueError("no video stream header (strh 'vids' with a rate) found")
     if not frames_raw:
         raise ValueError("no frames in movi list")
     stride = _row_stride(w)

@@ -57,11 +57,16 @@ def test_band_guarantee_radius(spark):
     assert len(got) == 1 and got[0].hamming == 7
 
 
-def test_bloom_prefilter_blocks_novel(spark):
+def test_bloom_prefilter_blocks_novel(spark, tmp_path_factory):
+    """The band index's per-partition bloom probe (the pre-filter the
+    engine takes above DIRECT_VERIFY_MAX_BAND_ROWS)."""
+    from pyspider_spark.tables import TableStore
+
+    idx = neardup.BandIndex(TableStore(spark, str(tmp_path_factory.mktemp("bloom"))))
     prior = imgs_df(spark, [("p1", 111), ("p2", 222)])
-    blob = neardup.build_band_bloom(prior)
+    idx.append_round(idx.band_rows(prior), 0)
     new = imgs_df(spark, [("n1", 111), ("n2", 0x7777777777777777)])
-    kept = {r.image_id for r in neardup.bloom_prefilter(new, blob).collect()}
+    kept = {r.image_id for r in idx._probe_ids(idx.band_rows(new)).collect()}
     assert "n1" in kept  # exact phash match must survive the prefilter
     # n2 shares no band with the corpus: overwhelmingly likely filtered
     assert "n2" not in kept
@@ -90,10 +95,13 @@ def _brute_pairs(rows):
     return out
 
 
-def test_band_index_matches_bruteforce(spark, tmp_path_factory):
-    """Driving the incremental BandIndex over 4 rounds of appends (with
-    a compaction in the middle) finds EXACTLY the pairs a brute-force
-    all-pairs scan finds — planted near-dups across and within rounds."""
+def test_band_index_matches_bruteforce(spark, tmp_path_factory, monkeypatch):
+    """Driving the incremental BandIndex the way the engine does
+    (_detect_near_dups) over 4 rounds of appends, with a compaction in
+    the middle, finds EXACTLY the pairs a brute-force all-pairs scan
+    finds — planted near-dups across and within rounds. Run on both
+    sides of DIRECT_VERIFY_MAX_BAND_ROWS: the direct corpus verify and
+    the bloom-probe + pid-pruned verify."""
     from pyspider_spark.tables import TableStore
 
     base = 0x0123456789ABCDEF
@@ -104,32 +112,30 @@ def test_band_index_matches_bruteforce(spark, tmp_path_factory):
         [("r2a", 0x5555AAAA5555AAAA), ("r2b", 0x5555AAAA5555AAAB)],  # in-batch dup
         [("r3a", base ^ (1 << 63)), ("r3b", 0x1111222233334444)],    # dup of r0a/r1a
     ]
-    wd = str(tmp_path_factory.mktemp("bandidx"))
-    store = TableStore(spark, wd)
-    idx = neardup.BandIndex(store)
-    got = set()
-    for r, batch in enumerate(rounds):
-        new = imgs_df(spark, batch)
-        pairs = neardup.near_dup_pairs(new, new, r)
-        if idx.has_corpus():
-            cand = idx.candidate_images(new)
-            pairs = pairs.unionByName(idx.pairs_vs_corpus(cand, r)).dropDuplicates(
-                ["image_id", "dup_of"]
-            )
-        got |= {frozenset((p.image_id, p.dup_of)) for p in pairs.collect()}
-        idx.append_round(new, r)
-        # incremental-write contract: indexing round r lands exactly the
-        # NEW images' band rows (8 per image), never a corpus re-explode
-        assert (
-            store.last_append_rows("image_bands")
-            == neardup.N_BANDS * len(batch)
-        )
-        if r == 1:
-            idx.compact(r)
-
     all_rows = [t for batch in rounds for t in batch]
     want = _brute_pairs(all_rows)
-    assert got == want and len(want) >= 3
+    assert len(want) >= 3
+    for direct_max in (neardup.DIRECT_VERIFY_MAX_BAND_ROWS, 0):
+        monkeypatch.setattr(neardup, "DIRECT_VERIFY_MAX_BAND_ROWS", direct_max)
+        store = TableStore(spark, str(tmp_path_factory.mktemp("bandidx")))
+        idx = neardup.BandIndex(store)
+        got = set()
+        for r, batch in enumerate(rounds):
+            bands = idx.band_rows(imgs_df(spark, batch))
+            pairs = neardup.pairs_from_bands(bands, bands, r, neardup.MAX_HAMMING)
+            if idx.has_corpus():
+                pairs = pairs.unionByName(idx.pairs_vs_corpus(bands, r))
+            got |= {frozenset((p.image_id, p.dup_of)) for p in pairs.collect()}
+            idx.append_round(bands, r)
+            # incremental-write contract: indexing round r lands exactly the
+            # NEW images' band rows (8 per image), never a corpus re-explode
+            assert (
+                store.last_append_rows("image_bands")
+                == neardup.N_BANDS * len(batch)
+            )
+            if r == 1:
+                idx.compact(r)
+        assert got == want, f"DIRECT_VERIFY_MAX_BAND_ROWS={direct_max}"
 
 
 def _brute_pairs_radius(rows, radius):
@@ -167,22 +173,26 @@ def test_wide_band_geometry_lossless_within_radius(spark, n_bands, band_bits):
     assert got == _brute_pairs_radius(rows, radius)
 
 
-def test_band_index_wide_geometry_roundtrip(spark, tmp_path_factory):
+def test_band_index_wide_geometry_roundtrip(spark, tmp_path_factory, monkeypatch):
     """BandIndex with the 4x16 geometry finds cross-round planted dups
-    within the guaranteed radius and writes n_bands rows per new image."""
+    within the guaranteed radius and writes n_bands rows per new image,
+    through both the direct verify and the bloom-probe verify."""
     from pyspider_spark.tables import TableStore
 
     base = 0x0123456789ABCDEF
-    wd = str(tmp_path_factory.mktemp("bandidx16"))
-    store = TableStore(spark, wd)
-    idx = neardup.BandIndex(store, n_bands=4, band_bits=16)
-    r0 = imgs_df(spark, [("r0a", base), ("r0b", 0x7EDCBA9876543210)])
-    idx.append_round(r0, 0)
-    assert store.last_append_rows("image_bands") == 4 * 2
-    r1 = imgs_df(spark, [("r1a", base ^ 0b101), ("r1b", 0x1111222233334444)])
-    cand = idx.candidate_images(r1)
-    got = {(p.image_id, p.dup_of, p.hamming) for p in idx.pairs_vs_corpus(cand, 1).collect()}
-    assert got == {("r1a", "r0a", 2)}
+    for direct_max in (neardup.DIRECT_VERIFY_MAX_BAND_ROWS, 0):
+        monkeypatch.setattr(neardup, "DIRECT_VERIFY_MAX_BAND_ROWS", direct_max)
+        store = TableStore(spark, str(tmp_path_factory.mktemp("bandidx16")))
+        idx = neardup.BandIndex(store, n_bands=4, band_bits=16)
+        r0 = imgs_df(spark, [("r0a", base), ("r0b", 0x7EDCBA9876543210)])
+        idx.append_round(idx.band_rows(r0), 0)
+        assert store.last_append_rows("image_bands") == 4 * 2
+        r1 = imgs_df(spark, [("r1a", base ^ 0b101), ("r1b", 0x1111222233334444)])
+        got = {
+            (p.image_id, p.dup_of, p.hamming)
+            for p in idx.pairs_vs_corpus(idx.band_rows(r1), 1).collect()
+        }
+        assert got == {("r1a", "r0a", 2)}, f"DIRECT_VERIFY_MAX_BAND_ROWS={direct_max}"
 
 
 def test_choose_geometry_rule():
@@ -319,7 +329,7 @@ def test_band_index_geometry_pinned(spark, tmp_path_factory):
     imgs = spark.createDataFrame(
         [("i1", 12345), ("i2", 99999)], "image_id string, phash long"
     )
-    idx.append_round_bands(idx.bands_of(imgs), 0)
+    idx.append_round(idx.band_rows(imgs), 0)
     with pytest.raises(ValueError, match="geometry"):
         neardup.BandIndex(store, n_bands=4, band_bits=16)
     # same geometry reopens fine

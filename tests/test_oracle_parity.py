@@ -10,6 +10,7 @@ import pytest
 
 from pyspider_spark import queries as Q
 
+from . import dedup_reference as R
 from .parity import compare, duck_run
 
 SF = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
@@ -58,7 +59,7 @@ def test_ngram_lsh_vs_exact_properties(spark):
     lsh = {(r.doc_a, r.doc_b): r.jaccard_bp
            for r in D.ngram_jaccard_pairs(docs, 500).collect()}
     exact = {(r.doc_a, r.doc_b): r.jaccard_bp
-             for r in D.ngram_jaccard_pairs_exact(docs, 500).collect()}
+             for r in R.ngram_jaccard_pairs_exact(docs, 500).collect()}
     high = {k for k, v in exact.items() if v >= 9000}
     assert high and high <= set(lsh), "missed a high-jaccard same-lang pair"
     langs = {r.doc_id: r.lang for r in docs.select("doc_id", "lang").collect()}
@@ -111,7 +112,7 @@ def test_minhash_udf_matches_sql(spark):
         }
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    assert snap(D.minhash_signature(docs)) == snap(D.minhash_signature_sql(docs))
+    assert snap(D.minhash_signature(docs)) == snap(R.minhash_signature_sql(docs))
 
     edge = spark.createDataFrame(
         [
@@ -128,7 +129,7 @@ def test_minhash_udf_matches_sql(spark):
         ],
         "doc_id int, text string",
     )
-    assert snap(D.minhash_signature(edge)) == snap(D.minhash_signature_sql(edge))
+    assert snap(D.minhash_signature(edge)) == snap(R.minhash_signature_sql(edge))
 
 
 def test_minhash_udf_matches_sql_fuzz(spark):
@@ -162,7 +163,7 @@ def test_minhash_udf_matches_sql_fuzz(spark):
             ).collect()
         }
 
-    got, want = snap(D.minhash_signature(df)), snap(D.minhash_signature_sql(df))
+    got, want = snap(D.minhash_signature(df)), snap(R.minhash_signature_sql(df))
     assert got == want
     # and the UDF must agree the same docs were shingle-less
     assert set(got) == set(want)

@@ -57,14 +57,15 @@ def test_whole_stage_codegen_in_text_ops(spark):
 
 
 def test_pop_ranking_has_no_python(spark):
-    """The pop operator is pure windows: nothing Python in the plan."""
+    """The engine's pop operator is pure windows and joins: nothing
+    Python in the plan, on both the exact and the salted path."""
     from pyspider_spark import scheduler
     from pyspider_spark.schemas import CONFIG, FRONTIER
 
     frontier = spark.createDataFrame([], FRONTIER)
     config = spark.createDataFrame([], CONFIG)
-    ranked = scheduler.rank_for_pop(frontier, config, global_budget=None)
-    plan = plan_of(ranked)
+    popped = scheduler.popped_via_thresholds(frontier, config, big_hosts=["big"])
+    plan = plan_of(popped)
     assert "EvalPython" not in plan
     assert "Window" in plan
 

@@ -112,12 +112,9 @@ def test_fresh_run_on_used_workdir_refuses(runs, spark):
         fresh.run(max_rounds=2)
 
 
-def test_ledger_jsonl_torn_tail_and_legacy(runs, spark, tmp_path):
+def test_ledger_jsonl_torn_tail(runs):
     """The round ledger is JSONL with O(1) appends: a torn final line
-    (crash mid-append) reads as 'round not committed'; a legacy
-    whole-array ledger is still readable and migrates on next append."""
-    import json
-
+    (crash mid-append) reads as 'round not committed'."""
     eng_a, _eng_b = runs
     ledger = eng_a._read_ledger()
     assert ledger and ledger[-1]["round"] == ROUNDS - 1
@@ -125,17 +122,6 @@ def test_ledger_jsonl_torn_tail_and_legacy(runs, spark, tmp_path):
     with open(eng_a._ledger_path, "a") as f:
         f.write('{"round": 99, "snap')
     assert eng_a._read_ledger() == ledger
-    # legacy array format: same entries readable, migrated on append
-    legacy_path = str(tmp_path / "rounds.json")
-    with open(legacy_path, "w") as f:
-        json.dump(ledger[:2], f)
-    probe = CrawlEngine(spark, str(tmp_path), SPEC, n_seen_partitions=4)
-    probe._ledger_path = legacy_path
-    assert probe._read_ledger() == ledger[:2]
-    probe._append_ledger(ledger[2])
-    assert probe._read_ledger() == ledger[:3]
-    with open(legacy_path) as f:
-        assert f.read(1) != "["  # migrated to JSONL
 
 
 def test_ingest_survives_crash_resume(spark, tmp_path_factory):

@@ -1,5 +1,11 @@
 """Unit tests for the frontier scheduler: pop order, budgets, robots,
-skew fixture, batch dedup selection, fetch-outcome split."""
+skew fixture, batch dedup selection, fetch-outcome split.
+
+Pops go through the engine's path (``loop.run_round``): per-host
+``popped_via_thresholds``, then ``apply_global_budget`` when a global
+budget is set. Each pop case runs once with no salted host and once
+with its busiest host salted; deferral is ``candidates − popped``, the
+way the engine counts it."""
 
 from __future__ import annotations
 
@@ -25,6 +31,29 @@ def frontier_rows(spark, rows):
     return spark.createDataFrame(data, FRONTIER)
 
 
+def engine_pop(df, config, big_hosts, global_budget=None):
+    """The engine's pop decision over ``df`` (loop.run_round)."""
+    popped = scheduler.popped_via_thresholds(df, config, big_hosts=big_hosts)
+    if global_budget is None:
+        return popped
+    capped = scheduler.apply_global_budget(
+        popped.withColumn("_pop", F.lit(True)), global_budget
+    )
+    return capped.filter(F.col("_pop")).drop("_pop")
+
+
+def count_by_host(df) -> dict:
+    return {r["host"]: r["count"] for r in df.groupBy("host").count().collect()}
+
+
+def deferred_by_host(df, popped) -> dict:
+    """candidates − popped per host, zero entries dropped."""
+    left = count_by_host(df)
+    for h, n in count_by_host(popped).items():
+        left[h] -= n
+    return {h: n for h, n in left.items() if n}
+
+
 def test_pop_order_and_budget(spark):
     rows = [
         (f"https://h1/u{i}", "h1", prio, exe)
@@ -35,25 +64,26 @@ def test_pop_order_and_budget(spark):
         [{"host": "h1", "concurrency": 3, "delay_s": 0.0, "timeout_s": 1.0,
           "max_retries": 3, "pop_budget": 100}], CONFIG
     )
-    popped, deferred = scheduler.pop(df, config, round_no=0)
-    got = sorted(r.url_canon for r in popped.collect())
-    # order: prio 9/exe 0 (u4), prio 9/exe 2 (u2), prio 5/exe 0 (u0); budget 3
-    assert got == ["https://h1/u0", "https://h1/u2", "https://h1/u4"]
-    d = deferred.collect()
-    assert {r.url_canon for r in d} == {"https://h1/u1", "https://h1/u3"}
-    assert all(r.exetime == 1 and r.vetted for r in d)
+    for big_hosts in ([], ["h1"]):
+        popped = engine_pop(df, config, big_hosts)
+        got = sorted(r.url_canon for r in popped.collect())
+        # order: prio 9/exe 0 (u4), prio 9/exe 2 (u2), prio 5/exe 0 (u0); budget 3
+        assert got == ["https://h1/u0", "https://h1/u2", "https://h1/u4"]
+        deferred = {r.url_canon for r in df.collect()} - set(got)
+        assert deferred == {"https://h1/u1", "https://h1/u3"}
 
 
 def test_global_budget_cap(spark):
     rows = [(f"https://h{i}/u", f"h{i}", 5, 0) for i in range(10)]
     df = frontier_rows(spark, rows)
     config = spark.createDataFrame([], CONFIG)
-    popped, deferred = scheduler.pop(df, config, round_no=0, global_budget=4)
-    assert popped.count() == 4
-    assert deferred.count() == 6
-    # global order is the north-rule total order → lexicographically first hosts
-    got = sorted(r.host for r in popped.collect())
-    assert got == ["h0", "h1", "h2", "h3"]
+    for big_hosts in ([], ["h0"]):
+        popped = engine_pop(df, config, big_hosts, global_budget=4)
+        assert popped.count() == 4
+        assert df.count() - popped.count() == 6
+        # global order is the north-rule total order → lexicographically first hosts
+        got = sorted(r.host for r in popped.collect())
+        assert got == ["h0", "h1", "h2", "h3"]
 
 
 def test_skewed_host_capped(spark):
@@ -63,13 +93,14 @@ def test_skewed_host_capped(spark):
     rows += [(f"https://small{i}/u", f"small{i}", 5, 0) for i in range(10)]
     df = frontier_rows(spark, rows)
     config = spark.createDataFrame([], CONFIG)  # default budget 20
-    popped, _ = scheduler.pop(df, config, round_no=0)
-    by_host = {r["host"]: r["count"] for r in popped.groupBy("host").count().collect()}
-    assert by_host["big"] == scheduler.DEFAULT_BUDGET
-    assert all(by_host[f"small{i}"] == 1 for i in range(10))
-    # and the budget picks the BEST of the giant host, not an arbitrary slice
-    best = [r.url_canon for r in popped.filter("host='big'").collect()]
-    assert all(int(u[-4:]) % 10 == 9 for u in best)
+    for big_hosts in ([], ["big"]):
+        popped = engine_pop(df, config, big_hosts)
+        by_host = count_by_host(popped)
+        assert by_host["big"] == scheduler.DEFAULT_BUDGET
+        assert all(by_host[f"small{i}"] == 1 for i in range(10))
+        # and the budget picks the BEST of the giant host, not an arbitrary slice
+        best = [r.url_canon for r in popped.filter("host='big'").collect()]
+        assert all(int(u[-4:]) % 10 == 9 for u in best)
 
 
 def test_robots_filter(spark):
@@ -83,9 +114,9 @@ def test_robots_filter(spark):
         [{"host": "h1", "path_prefix": "/private/", "allow": False, "crawl_delay_s": None}],
         ROBOTS,
     )
-    allowed, blocked = scheduler.robots_filter(df, robots)
-    assert {r.url_canon for r in blocked.collect()} == {"https://h1/private/1"}
-    assert {r.url_canon for r in allowed.collect()} == {
+    marked = {r.url_canon: r._blk for r in scheduler.robots_mark(df, robots).collect()}
+    assert {u for u, blk in marked.items() if blk} == {"https://h1/private/1"}
+    assert {u for u, blk in marked.items() if not blk} == {
         "https://h1/public/1",
         "https://h2/private/1",  # h2 has no rule
     }
@@ -118,11 +149,10 @@ def test_crawl_delay_caps_budget(spark):
         ROBOTS,
     )
     eff = scheduler.effective_config(config, robots)
-    popped, deferred = scheduler.pop(df, eff, round_no=0)
-    by_host = {r["host"]: r["count"] for r in popped.groupBy("host").count().collect()}
-    assert by_host == {"slow": 3, "fast": 8}
-    d = {r["host"]: r["count"] for r in deferred.groupBy("host").count().collect()}
-    assert d == {"slow": 7, "fast": 2}
+    for big_hosts in ([], ["slow"]):
+        popped = engine_pop(df, eff, big_hosts)
+        assert count_by_host(popped) == {"slow": 3, "fast": 8}
+        assert deferred_by_host(df, popped) == {"slow": 7, "fast": 2}
 
 
 def test_zero_crawl_delay_means_no_delay_in_engine_and_oracle(spark):
@@ -146,8 +176,9 @@ def test_zero_crawl_delay_means_no_delay_in_engine_and_oracle(spark):
     )
     eff = scheduler.effective_config(config, robots)
     assert eff.collect()[0]["concurrency"] == 8
-    popped, deferred = scheduler.pop(df, eff, round_no=0)
-    assert popped.count() == 8 and deferred.count() == 2
+    for big_hosts in ([], ["zero"]):
+        popped = engine_pop(df, eff, big_hosts)
+        assert popped.count() == 8 and df.count() - popped.count() == 2
     # oracle side: same spec shape must not raise and must agree
     from pyspider_spark.synth import GraphSpec, config_rows
     from tests.oracle_sim import OracleEngine
@@ -232,11 +263,11 @@ def test_split_fetch_outcomes(spark):
     assert {r.url_canon for r in exhausted.collect()} == {"fail-exhausted"}
 
 
-def test_popped_via_thresholds_matches_rank_adaptive(spark):
+def test_popped_via_thresholds_matches_rank_for_pop(spark):
     """The slim-rank + per-host-threshold pop path must return exactly
-    the rows rank_adaptive flags _pop — across small hosts, a salted
-    big host, a host with fewer rows than its budget, and a
-    budget-0 host (which must pop nothing)."""
+    the rows the single exact per-host window flags _pop — across small
+    hosts, a salted big host, a host with fewer rows than its budget,
+    and a budget-0 host (which must pop nothing)."""
     import random
 
     rng = random.Random(7)
@@ -263,13 +294,13 @@ def test_popped_via_thresholds_matches_rank_adaptive(spark):
         ],
         CONFIG,
     )
+    want = sorted(
+        r.url_canon
+        for r in scheduler.rank_for_pop(df, config, salted=False)
+        .filter(F.col("_pop"))
+        .collect()
+    )
     for big_hosts in ([], ["big"]):
-        want = sorted(
-            r.url_canon
-            for r in scheduler.rank_adaptive(df, config, big_hosts=big_hosts)
-            .filter(F.col("_pop"))
-            .collect()
-        )
         got_rows = scheduler.popped_via_thresholds(
             df, config, big_hosts=big_hosts
         ).collect()

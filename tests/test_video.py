@@ -81,6 +81,37 @@ def test_decode_rejects_garbage_and_compressed():
         V.decode_avi_rgb24(bytes(payload))
 
 
+def _strip_chunk(payload: bytes, fourcc: bytes) -> bytes:
+    """Remove the first ``fourcc`` chunk from the hdrl/strl header,
+    shrinking the RIFF, hdrl and strl sizes that enclose it."""
+    buf = bytearray(payload)
+    at = buf.find(fourcc)
+    (sz,) = struct.unpack_from("<I", buf, at + 4)
+    cut = 8 + sz + (sz % 2)
+    # RIFF size at 4; a LIST's size sits 4 bytes before its list type
+    for size_at in (4, buf.find(b"hdrl") - 4, buf.find(b"strl") - 4):
+        (n,) = struct.unpack_from("<I", buf, size_at)
+        struct.pack_into("<I", buf, size_at, n - cut)
+    del buf[at : at + cut]
+    return bytes(buf)
+
+
+def test_decode_rejects_missing_stream_header():
+    """An AVI without a 'vids' strh has no frame rate: decoding must
+    raise (the row lands as decode_ok=False), not assume a default fps
+    that skews duration_ms."""
+    import pandas as pd
+
+    frames = V.synth_frames("nostrh")
+    payload = V.encode_avi_rgb24(frames, 25)
+    stripped = _strip_chunk(payload, b"strh")
+    assert b"strh" not in stripped and b"strf" in stripped
+    with pytest.raises(ValueError, match="strh"):
+        V.decode_avi_rgb24(stripped)
+    out = M.sample_video_frames_batch(pd.Series([stripped, payload]), 2)
+    assert out[0] is None and out[1] is not None
+
+
 def test_sample_frames_contract():
     frames = np.zeros((7, 2, 2, 3), dtype=np.uint8)
     for i in range(7):
